@@ -18,6 +18,10 @@ Manifest contents per stage:
 * wall-clock duration + stage name ≈ the reference's per-run Stats
   (/root/reference/internal/model/model.go:51-78)
 
+The near-dup pipeline checkpoints through a durable ``StageMaterializer``
+(one stage per cut); :func:`run_exact_dedup_checkpointed` runs the exact
+funnel with one stage per step.
+
 Idempotency contract (tested): re-running a completed stage is a no-op
 read; killing between data-write and publish re-runs the stage; outputs
 are byte-identical given the same seed/config.
@@ -160,63 +164,3 @@ def run_exact_dedup_checkpointed(
     )
     return {"candidates": candidates, "survivors": survivors, "groups": groups}
 
-
-def run_neardup_checkpointed(
-    store: CheckpointStore, pages: DataFrame, cfg=None,
-    id_col: str = "url", text_col: str = "text",
-) -> dict[str, DataFrame]:
-    """The near-dup pipeline with a checkpoint after every stage.
-
-    Stage graph: signatures → bucket membership → candidate pairs →
-    verified pairs → clusters. A resumed run reads the last published
-    stage instead of recomputing the (expensive) MinHash UDF or pair
-    shuffles — this is the durable-table version of the scratch-table
-    materializations inside ``near_dup_pipeline`` (same cut points),
-    and what a 10¹²-doc run would actually use.
-    """
-    from doppel_spark.config import NearDupConfig
-    from doppel_spark.functions.digests import full_digest
-    from doppel_spark.operators.components import connected_components
-    from doppel_spark.operators.lsh import (band_keys, bucket_membership,
-                                            pairs_from_membership,
-                                            signature_stage, verify_pairs)
-
-    cfg = cfg or NearDupConfig()
-    base = pages.select(F.col(id_col), F.col(text_col))
-
-    def build_reps() -> DataFrame:
-        digests = base.select(F.col(id_col), full_digest(text_col))
-        rep_ids = digests.groupBy("digest").agg(F.min(id_col).alias(id_col))
-        return digests.join(
-            rep_ids.withColumnRenamed(id_col, "rep"), "digest"
-        ).select(id_col, "rep")
-
-    rep_map = store.run("n0_exact_reps", build_reps)
-    reps = base.join(
-        rep_map.filter(F.col(id_col) == F.col("rep")).select(id_col),
-        id_col, "left_semi")
-    sigs = store.run(
-        "n1_signatures",
-        lambda: signature_stage(reps, cfg, id_col=id_col, text_col=text_col),
-    )
-    memb = store.run(
-        "n2_membership",
-        lambda: bucket_membership(band_keys(sigs, cfg, id_col=id_col),
-                                  ["band_hash"], id_col=id_col))
-    cand = store.run(
-        "n3_candidates",
-        lambda: pairs_from_membership(memb, ["band_hash"], id_col=id_col,
-                                      bucket_cap=cfg.bucket_cap))
-    verified = store.run(
-        "n4_verified",
-        lambda: verify_pairs(cand, sigs, cfg, id_col=id_col),
-    )
-    exact_edges = rep_map.filter(F.col(id_col) != F.col("rep")).select(
-        F.col("rep").alias("url_a"), F.col(id_col).alias("url_b"))
-    clusters = store.run(
-        "n5_clusters",
-        lambda: connected_components(
-            verified.select("url_a", "url_b").union(exact_edges)),
-    )
-    return {"signatures": sigs, "candidates": cand,
-            "verified": verified, "clusters": clusters}

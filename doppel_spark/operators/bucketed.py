@@ -12,8 +12,8 @@ Exchange node at all**, verified mechanically by
 :func:`doppel_spark.plans.inspect.assert_no_exchange`. With
 ``sortBy`` the per-bucket sort is pre-paid at write time too.
 
-This is the batch-layout twin of the checkpointed runner's digest
-tables: pay one shuffle when the snapshot lands, then every later
+This is the batch-layout twin of the durable checkpoint stages'
+digest tables: pay one shuffle when the snapshot lands, then every later
 join against it is free. (On Iceberg the same contract is a
 ``bucket(n, digest)`` partition transform + storage-partitioned
 joins; the parquet ``saveAsTable`` here is the stand-in this

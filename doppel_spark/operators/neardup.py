@@ -40,7 +40,8 @@ from doppel_spark.operators.lsh import (
     signature_stage,
     verify_pairs,
 )
-from doppel_spark.operators.stage import StageMaterializer
+from doppel_spark.operators.stage import StageMaterializer, plan_size_bytes
+from doppel_spark.plans.inspect import physical_plan
 
 
 @dataclass
@@ -71,26 +72,41 @@ class NearDupResult:
             self.materializer.cleanup()
 
 
+def _narrow(df: DataFrame, par: int) -> bool:
+    """Whether ``df`` runs on fewer than ``par`` tasks, without running a
+    job. A plan without an exchange reports its splits from planning; one
+    with an exchange would run it, so the size estimate stands in: AQE
+    coalesces a shuffle below ``par`` partitions only when it holds less
+    than ``coalescePartitions.minPartitionSize`` per core."""
+    if "Exchange" not in physical_plan(df):
+        return df.rdd.getNumPartitions() < par
+    spark = df.sparkSession
+    min_part = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+    size = plan_size_bytes(df)
+    return size is not None and size < par * min_part
+
+
 def near_dup_pipeline(
     pages: DataFrame,
     cfg: NearDupConfig | None = None,
     id_col: str = "url",
     text_col: str = "text",
     use_simhash: bool = False,
-    small_input: bool | None = None,
+    mat: StageMaterializer | None = None,
 ) -> NearDupResult:
-    """Flagship near-dup clustering. ``small_input`` picks the stage
-    materialization strategy (None = auto from the input's size
-    estimate): small corpora persist the five cut stages — a scratch
-    table's fixed write/read-back cost (~10 s across the run) only pays
-    for itself at ≳300 k docs, where the same cuts took local[16] from
-    185 s to 44 s. See :class:`~doppel_spark.operators.stage.
-    StageMaterializer` for the measured tradeoffs; the cut points mirror
-    the durable checkpoint runner (:mod:`doppel_spark.checkpoint`)."""
+    """Flagship near-dup clustering. ``mat`` cuts the five stages
+    (digests, sigs, memb, cand, pairs) and the CC rounds; by default it
+    is picked from the input's size estimate: small corpora persist — a
+    scratch table's fixed cost (~10 s across the run) only pays for
+    itself at ≳300 k docs, where it took local[16] from 185 s to 44 s.
+    One built with a ``CheckpointStore`` makes the cuts durable, and a
+    rerun on that store recomputes only CC (and the SimHash pairs). See
+    :class:`~doppel_spark.operators.stage.StageMaterializer`."""
     cfg = cfg or NearDupConfig()
     base = pages.select(F.col(id_col), F.col(text_col))
-    mat = StageMaterializer.for_input(base, prefix="neardup",
-                                      small_input=small_input)
+    if mat is None:
+        mat = StageMaterializer.for_input(base, prefix="neardup")
     _materialize = mat.cut  # stage cuts below; see class docstring
 
     # exact-dedup pre-pass: one representative (min id) per distinct text.
@@ -101,9 +117,8 @@ def near_dup_pipeline(
     # exact-edge join, and — via the semi-join — the representatives
     # scan), two of which run as concurrent broadcast jobs: without a
     # materialization each re-scans the corpus and re-hashes every text.
-    # The projection is ~40 B/row; at cluster scale the checkpointed
-    # runner materializes this stage as a table instead (same idea).
-    # force=False (persist mode only): the sigs cut below is the next
+    # The projection is ~40 B/row; a table policy writes it instead.
+    # force=False (local persist mode only): the sigs cut below is the next
     # blocking action and its rep_ids broadcast build scans every
     # digest partition, filling this cache in that job; later
     # concurrent consumers are serialized per-partition by the block
@@ -127,14 +142,12 @@ def near_dup_pipeline(
     # at sf1.0). At cluster scale the input has >= parallelism splits
     # and this is a no-op.
     par = base.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < par:
+    if _narrow(base, par):
         reps = reps.repartition(par)
 
     # Materialize signatures: they feed band-key explosion AND both
     # sides of the verification join — otherwise the (expensive) MinHash
-    # UDF re-runs 3×. At cluster scale this becomes a stage checkpoint
-    # table (see doppel_spark.checkpoint); the semantics are the same:
-    # compute the signal once, reuse it.
+    # UDF re-runs 3× (and a durable resume never re-runs it at all).
     #
     # The stage runs via `signature_stage` (mapInArrow): Spark's Arrow
     # string buffer is read in place and the packed-binary signature
@@ -173,8 +186,6 @@ def near_dup_pipeline(
     # three times (two participant-list branches + the pair join) and
     # the CC edge union twice more — recomputing the pair join per
     # evaluation multiplies the most expensive shuffle in the job.
-    # (The checkpointed runner materializes this stage as a table for
-    # the same reason.)
     cand_rid = _materialize(
         pairs_from_membership(memb, ["band_hash"], id_col="rid",
                               bucket_cap=cfg.bucket_cap), "cand")

@@ -28,8 +28,11 @@ how to cut a stage, with the strategy picked by input size and master:
   table. On a cluster the table mode therefore requires an
   executor-visible location via the ``spark.doppel.scratchDir`` conf;
   without one we fall back to persist (correct everywhere, merely
-  slower at scale — the durable path for real clusters is the
-  checkpointed runner in :mod:`doppel_spark.checkpoint`).
+  slower at scale).
+* **Durable** (built with a ``CheckpointStore``): each ``cut`` is a
+  checkpoint stage named after the cut, resumed without evaluating its
+  lineage. ``cut_iter``/``release``/``cleanup`` stay transient: CC
+  rounds are recomputed from the durable stage that feeds them.
 
 Lifetime: scratch tables live under a per-session temp dir reclaimed at
 process exit; ``cleanup()`` reclaims a materializer's tables/caches
@@ -40,15 +43,15 @@ DataFrames, so ``cleanup()`` must only run after consumers finish.
 from __future__ import annotations
 
 import atexit
-import os
 import shutil
 import tempfile
-import time
 import uuid
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
+
+from doppel_spark.checkpoint import CheckpointStore
 
 #: pipeline inputs below this are "small": persist beats a table write.
 #: Chosen from the measured crossover — five table cuts cost ~10 s fixed
@@ -85,11 +88,12 @@ class StageMaterializer:
     """
 
     def __init__(self, spark: SparkSession, mode: str = "table",
-                 prefix: str = "stage") -> None:
+                 prefix: str = "stage",
+                 store: CheckpointStore | None = None) -> None:
         assert mode in ("table", "persist")
-        master = spark.sparkContext.master or ""
+        self._local = (spark.sparkContext.master or "").startswith("local")
         self._scratch_root: str | None = None
-        if mode == "table" and not master.startswith("local"):
+        if mode == "table" and not self._local:
             shared = spark.conf.get("spark.doppel.scratchDir", None)
             if shared:
                 # string join, not os.path.join: scratchDir may be a
@@ -107,6 +111,7 @@ class StageMaterializer:
         self.spark = spark
         self.mode = mode
         self.prefix = prefix
+        self.store = store
         self.paths: list[str] = []
         self.cached: list[DataFrame] = []
         #: id(returned frame) → ("persist", df) | ("table", path); lets
@@ -115,7 +120,8 @@ class StageMaterializer:
 
     @classmethod
     def for_input(cls, df: DataFrame, prefix: str = "stage",
-                  small_input: bool | None = None) -> "StageMaterializer":
+                  small_input: bool | None = None,
+                  store: CheckpointStore | None = None) -> "StageMaterializer":
         """Pick the strategy from the pipeline input's size estimate.
 
         ``small_input=None`` → auto: inputs under ``SMALL_INPUT_BYTES``
@@ -129,7 +135,7 @@ class StageMaterializer:
             size = plan_size_bytes(df)
             small_input = size is None or size < SMALL_INPUT_BYTES
         return cls(df.sparkSession, mode="persist" if small_input else "table",
-                   prefix=prefix)
+                   prefix=prefix, store=store)
 
     def _table_root(self) -> str:
         if self._scratch_root is None:
@@ -145,35 +151,40 @@ class StageMaterializer:
     def cut(self, df: DataFrame, name: str, force: bool = True) -> DataFrame:
         """Materialize ``df`` and return a frame reading the result.
 
+        With a store this is ``store.run(name, ...)``; ``force`` is moot.
+
         ``force=False`` (persist mode only) skips the eager ``count()``:
         the cache fills on the first downstream action instead. Only
         safe when the first consumer runs before any CONCURRENT one —
         two parallel jobs racing into a cold cache each recompute the
         lineage (the round-2 bug the forced count exists to prevent).
-        Sequential-consumer callers (iterative loops) save one job."""
-        t0 = time.time()
+        Sequential-consumer callers (iterative loops) save one job. Only
+        one block manager serializes a lazy fill, so a non-local master
+        always forces the count."""
+        if self.store is not None:
+            return self.store.run(name, lambda: df)
         if self.mode == "persist":
             out = df.persist(StorageLevel.MEMORY_AND_DISK)
-            if force:
+            if force or not self._local:
                 out.count()  # force: concurrent consumers must not race
             self.cached.append(out)
             self._frames[id(out)] = ("persist", out)
-        else:
-            path = (self._table_root().rstrip("/") + "/"
-                    + f"{self.prefix}_{name}_{uuid.uuid4().hex[:8]}")
-            # compression off: transient local data; codec CPU is the
-            # contended resource this path exists to avoid
-            df.write.option("compression", "none").parquet(path)
-            self.paths.append(path)
-            out = self.spark.read.parquet(path)
-            # the tuple keeps a strong reference to `out`: id() keys are
-            # only unique while the object lives, and a GC'd frame's id
-            # could be reused by an unrelated object, making release()
-            # delete a live scratch table (ADVICE r4)
-            self._frames[id(out)] = ("table", path, out)
-        if os.environ.get("DOPPEL_STAGE_TIMING"):
-            print(f"STAGE {name} mode={self.mode} "
-                  f"cut_s={time.time() - t0:.2f}", flush=True)
+            return out
+        return self._table_cut(df, name)
+
+    def _table_cut(self, df: DataFrame, name: str) -> DataFrame:
+        path = (self._table_root().rstrip("/") + "/"
+                + f"{self.prefix}_{name}_{uuid.uuid4().hex[:8]}")
+        # compression off: transient local data; codec CPU is the
+        # contended resource this path exists to avoid
+        df.write.option("compression", "none").parquet(path)
+        self.paths.append(path)
+        out = self.spark.read.parquet(path)
+        # the tuple keeps a strong reference to `out`: id() keys are
+        # only unique while the object lives, and a GC'd frame's id
+        # could be reused by an unrelated object, making release()
+        # delete a live scratch table (ADVICE r4)
+        self._frames[id(out)] = ("table", path, out)
         return out
 
     def cut_iter(self, df: DataFrame, name: str,
@@ -204,18 +215,14 @@ class StageMaterializer:
         caller's next action runs BEFORE any concurrent consumer.
         """
         if self.mode == "persist":
-            t0 = time.time()
             out = df.localCheckpoint(eager=eager)
             # localCheckpoint blocks live in the block manager until the
             # RDD is GC'd; there is no clean per-frame free, so release()
             # treats these as no-ops (same lifetime the pre-materializer
             # CC code had)
             self._frames[id(out)] = ("localckpt", out)
-            if os.environ.get("DOPPEL_STAGE_TIMING"):
-                print(f"STAGE {name} mode=localckpt "
-                      f"cut_s={time.time() - t0:.2f}", flush=True)
             return out
-        return self.cut(df, name)
+        return self._table_cut(df, name)
 
     def release(self, df: DataFrame) -> None:
         """Free ONE cut early — for iterative pipelines (connected
@@ -278,8 +285,3 @@ class StageMaterializer:
         self.paths.clear()
         self._frames.clear()
 
-
-def materialize(df: DataFrame, name: str = "stage",
-                small_input: bool | None = None) -> DataFrame:
-    """One-off cut for callers without a pipeline-scoped materializer."""
-    return StageMaterializer.for_input(df, small_input=small_input).cut(df, name)

@@ -10,8 +10,9 @@
 Build the zip with ``python -m zipfile -c doppel_spark.zip doppel_spark``
 (or rely on the session factory, which ships the package automatically
 when running outside spark-submit). Writes groups/clusters/pairs/
-metrics parquet tables + report.json under --output; every stage
-checkpoints under --checkpoint and resumes idempotently.
+bucket_stats parquet tables + report.json under --output; ``pairs`` are
+the verified near-dup pairs (exact duplicates are in groups/clusters).
+--checkpoint makes every stage durable and resumable, same tables.
 """
 
 from __future__ import annotations
@@ -134,18 +135,22 @@ def main(argv: list[str] | None = None) -> None:
             report_stats = report.stats
     if cfg.mode in ("near", "both"):
         ncfg = cfg.neardup
+        mat = None
         if args.checkpoint:
-            from doppel_spark.checkpoint import CheckpointStore, run_neardup_checkpointed
+            from doppel_spark.checkpoint import CheckpointStore
+            from doppel_spark.operators.stage import StageMaterializer
             nstore = CheckpointStore(spark, os.path.join(args.checkpoint, "near"),
                                      run_config=(_fc_key, repr(ncfg)))
-            staged = run_neardup_checkpointed(nstore, pages, ncfg)
-            tables["clusters"] = staged["clusters"]
-            tables["pairs"] = staged["verified"]
-        else:
-            ndr = near_dup_pipeline(pages, ncfg, use_simhash=cfg.simhash)
-            tables["clusters"] = ndr.clusters
-            tables["pairs"] = ndr.pairs
-            tables["bucket_stats"] = ndr.bucket_stats
+            mat = StageMaterializer.for_input(pages.select("url", "text"),
+                                              prefix="neardup", store=nstore)
+        ndr = near_dup_pipeline(pages, ncfg, use_simhash=cfg.simhash, mat=mat)
+        tables["clusters"] = ndr.clusters
+        # signatures hold only representatives: pairs whose url_b has
+        # one are verified near-dups, the rest exact rep -> member edges
+        reps = ndr.signatures.select(F.col("url").alias("_rep"))
+        tables["pairs"] = ndr.pairs.join(reps, F.col("url_b") == F.col("_rep"),
+                                         "left_semi")
+        tables["bucket_stats"] = ndr.bucket_stats
     if errors is not None:
         tables["error_rows"] = errors
 

@@ -171,7 +171,7 @@ def main() -> None:
                 prev["all_secs"] = sorted(got["all_secs"])
             print(f"  local[{cpus}]: {got['sec']}s", flush=True)
             # completed runs survive a later crash: the blob regenerates
-            # the report via SCALE_RESULTS_JSON / extend_primary.py
+            # the report via SCALE_RESULTS_JSON
             partial = REPO / ".bench" / "scale_partial.json"
             partial.write_text(json.dumps(
                 {"levels": {str(c): v for c, v in results.items()}}))
@@ -211,10 +211,8 @@ def protocol_desc(results: dict[int, dict]) -> str:
     counts = ", ".join(
         f"local[{c}]×{len(results[c]['all_secs'])}" for c in sorted(results))
     return ("interleaved fresh-JVM repeats per level, best kept; "
-            f"sample counts: {counts} (campaign rounds via scale_bench.py, "
-            "uneven counts are targeted clean-window extensions via "
-            "extend_primary.py / harvest_clean.py — every sample, fast "
-            "or slow, is listed)")
+            f"sample counts: {counts} (campaign rounds via scale_bench.py "
+            "— every sample, fast or slow, is listed)")
 
 
 def finish(results: dict[int, dict], n_docs: int, protocol: str) -> None:

@@ -82,23 +82,37 @@ def test_full_pipeline_checkpointed_idempotent(spark, tmp_path):
 
 
 def test_neardup_checkpointed_resume(spark, tmp_path):
-    from doppel_spark.checkpoint import run_neardup_checkpointed
+    """The durable policy: every cut of the near-dup pipeline is a
+    published stage of the store. A second run on the same store builds
+    none of them and returns the same clusters (the identity with the
+    ephemeral policies is pinned in test_r06_optimizations)."""
+    from doppel_spark.operators.neardup import near_dup_pipeline
+    from doppel_spark.operators.stage import StageMaterializer
+
+    built = []
+
+    class CountingStore(CheckpointStore):
+        def run(self, stage, build, sort_cols=None):
+            def counted():
+                built.append(stage)
+                return build()
+            return super().run(stage, counted, sort_cols=sort_cols)
 
     pages = synth_pages(spark, 150)
-    store = CheckpointStore(spark, str(tmp_path / "nd"), run_config="v1")
-    r1 = run_neardup_checkpointed(store, pages)
-    c1 = {(r["url"], r["cluster_rep"]) for r in r1["clusters"].collect()}
+    root = str(tmp_path / "nd")
+
+    def clusters(store):
+        mat = StageMaterializer.for_input(pages, prefix="neardup", store=store)
+        res = near_dup_pipeline(pages, mat=mat)
+        return {(r["url"], r["cluster_rep"]) for r in res.clusters.collect()}
+
+    c1 = clusters(CountingStore(spark, root, run_config="v1"))
     assert c1
+    cuts = ["digests", "sigs", "memb", "cand", "pairs"]
+    assert built == cuts
     # resume: all five stages reused, identical clusters
-    store2 = CheckpointStore(spark, str(tmp_path / "nd"), run_config="v1")
-    r2 = run_neardup_checkpointed(store2, pages)
-    c2 = {(r["url"], r["cluster_rep"]) for r in r2["clusters"].collect()}
-    assert c1 == c2
-    stages = [m["stage"] for m in store.metrics()]
-    assert stages == ["n0_exact_reps", "n1_signatures", "n2_membership", "n3_candidates",
-                      "n4_verified", "n5_clusters"]
-    # clusters match the non-checkpointed pipeline
-    from doppel_spark.operators.neardup import near_dup_pipeline
-    live = near_dup_pipeline(pages)
-    c3 = {(r["url"], r["cluster_rep"]) for r in live.clusters.collect()}
-    assert c3 == c1
+    built.clear()
+    c2 = clusters(CountingStore(spark, root, run_config="v1"))
+    assert built == [] and c2 == c1
+    stages = [m["stage"] for m in CheckpointStore(spark, root).metrics()]
+    assert stages == sorted(cuts)

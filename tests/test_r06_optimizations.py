@@ -194,24 +194,38 @@ def test_cc_orientation_and_duplicate_invariance(spark):
         ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
 
 
-def test_neardup_pipeline_persist_vs_table_mode_identical(spark):
-    """The r6 lazy persist fills (cut force=False) apply only in
-    persist mode; the table mode always writes eagerly. Both strategies
-    must produce identical pairs and clusters — this pins the
+@pytest.mark.parametrize("use_simhash", [False, True])
+def test_neardup_pipeline_materialization_policies_identical(
+        spark, tmp_path, use_simhash):
+    """The r6 lazy persist fills (cut force=False) apply only in local
+    persist mode; table mode always writes eagerly, and the durable
+    policy publishes every cut as a checkpoint stage. All three must
+    produce identical pairs and clusters, with and without the SimHash
+    union (whose own fingerprint cut fills lazily too) — this pins the
     materialization policy to value identity."""
+    from doppel_spark.checkpoint import CheckpointStore
     from doppel_spark.config import NearDupConfig
     from doppel_spark.corpus import synth_pages
     from doppel_spark.operators.neardup import near_dup_pipeline
+    from doppel_spark.operators.stage import StageMaterializer
 
     pages = synth_pages(spark, 300)
+    mats = {
+        "persist": StageMaterializer(spark, mode="persist", prefix="neardup"),
+        "table": StageMaterializer(spark, mode="table", prefix="neardup"),
+        "durable": StageMaterializer(
+            spark, mode="persist", prefix="neardup",
+            store=CheckpointStore(spark, str(tmp_path / "ckpt"))),
+    }
     outs = {}
-    for small in (True, False):
-        res = near_dup_pipeline(pages, NearDupConfig(), small_input=small)
+    for mode, mat in mats.items():
+        res = near_dup_pipeline(pages, NearDupConfig(),
+                                use_simhash=use_simhash, mat=mat)
         pairs = sorted((r["url_a"], r["url_b"])
                        for r in res.pairs.select("url_a", "url_b").collect())
         clusters = sorted((r["url"], r["cluster_rep"])
                           for r in res.clusters.collect())
-        outs[small] = (pairs, clusters)
+        outs[mode] = (pairs, clusters)
         res.cleanup()
-    assert outs[True] == outs[False]
-    assert len(outs[True][0]) > 0  # non-vacuous: the plant has dup pairs
+    assert outs["persist"] == outs["table"] == outs["durable"]
+    assert len(outs["persist"][0]) > 0  # non-vacuous: the plant has dup pairs

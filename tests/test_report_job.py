@@ -46,8 +46,7 @@ def test_job_entrypoint_end_to_end(tmp_path):
     stages = sorted(os.listdir(ckpt / "exact"))
     assert stages == ["s1_length_candidates", "s2_quick_candidates", "s3_dup_groups"]
     nstages = sorted(os.listdir(ckpt / "near"))
-    assert nstages == ["n0_exact_reps", "n1_signatures", "n2_membership", "n3_candidates",
-                       "n4_verified", "n5_clusters"]
+    assert nstages == ["cand", "digests", "memb", "pairs", "sigs"]
 
 
 def test_report_yaml_and_render_dispatch(spark, docs):
@@ -112,3 +111,35 @@ def test_job_normalize_merges_encoding_variants(spark, tmp_path):
         n = duckdb.connect().execute(
             f"select count(*) from '{out}/groups/*.parquet'").fetchone()[0]
         assert n == expect_groups, (flag, n)
+
+
+def test_job_tables_identical_with_and_without_checkpoint(spark, tmp_path):
+    """One near-dup pipeline behind the job: --checkpoint only makes its
+    cuts durable, so clusters, verified pairs and bucket stats are the
+    same row sets with and without it, with and without --simhash, and
+    again when a checkpointed run resumes from its store."""
+    import sys as _sys
+
+    _sys.path.insert(0, str(REPO / "jobs"))
+    import neardup_job
+
+    from doppel_spark.corpus import synth_pages
+
+    src = str(tmp_path / "pages")
+    synth_pages(spark, 200).write.parquet(src)
+
+    def tables(name, *flags):
+        out = str(tmp_path / name)
+        neardup_job.main(["--input", src, "--output", out, "--mode", "near",
+                          *flags])
+        return {t: sorted(tuple(r) for r in
+                          spark.read.parquet(f"{out}/{t}").collect())
+                for t in ("clusters", "pairs", "bucket_stats")}
+
+    for sh in ((), ("--simhash",)):
+        tag = "sh" if sh else "lsh"
+        ckpt = str(tmp_path / f"ckpt_{tag}")
+        ephemeral = tables(f"eph_{tag}", *sh)
+        assert ephemeral["pairs"] and ephemeral["clusters"]
+        assert tables(f"ck_{tag}", "--checkpoint", ckpt, *sh) == ephemeral
+        assert tables(f"re_{tag}", "--checkpoint", ckpt, *sh) == ephemeral

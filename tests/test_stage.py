@@ -157,3 +157,34 @@ def test_cleanup_tolerates_stopped_context(spark, monkeypatch):
     monkeypatch.setattr(type(out), "unpersist", boom)
     mat.cleanup()  # must not raise
     assert mat.cached == [] and mat.paths == [] and mat._frames == {}
+
+
+def test_cut_force_false_fills_eagerly_on_non_local_master(spark):
+    # a lazy fill is only serialized by ONE block manager's write locks;
+    # on a cluster concurrent cold consumers could each recompute it
+    mat = StageMaterializer(spark, mode="persist", prefix="t")
+    mat._local = False
+    sc = spark.sparkContext
+    sc.setJobGroup("stage-nonlocal-fill", "t")
+    try:
+        mat.cut(spark.range(75).toDF("id"), "s", force=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("stage-nonlocal-fill")
+    mat.cleanup()
+
+
+def test_durable_cut_is_a_stage_and_iter_cuts_stay_transient(spark, tmp_path):
+    from doppel_spark.checkpoint import CheckpointStore
+
+    store = CheckpointStore(spark, str(tmp_path / "ck"))
+    mat = StageMaterializer(spark, mode="table", prefix="t", store=store)
+    out = mat.cut(spark.range(40).toDF("id"), "s1")
+    assert out.count() == 40 and store.is_complete("s1")
+    it = mat.cut_iter(spark.range(5).toDF("id"), "r0")
+    assert it.count() == 5 and len(mat.paths) == 1
+    assert not os.path.exists(os.path.join(store.root, "r0"))
+    mat.cleanup()
+    # the durable stage belongs to the store, not the materializer
+    assert mat.paths == [] and store.is_complete("s1")
+    assert spark.read.parquet(os.path.join(store.root, "s1")).count() == 40
