@@ -106,6 +106,7 @@ def hamming_distance(a: Column, b: Column) -> Column:
 def simhash_near_pairs(
     df: DataFrame, id_col: str = "url", fp_col: str = "simhash",
     hamming_t: int = 3, bucket_cap: int = 256,
+    mat: "StageMaterializer | None" = None,
 ) -> DataFrame:
     """All pairs within Hamming distance t, via pigeonhole block grouping.
 
@@ -113,6 +114,11 @@ def simhash_near_pairs(
     (pigeonhole guarantee). Buckets larger than ``bucket_cap`` fall back
     to star pairing around the smallest member (connectivity preserved,
     O(n) pairs) — the same skew guard as the LSH tier.
+
+    ``mat`` cuts the fingerprint and membership stages; the caller owns
+    it and frees them with ``mat.cleanup()`` once the pairs are
+    consumed. Without one, a size-aware materializer over ``df`` is
+    built here, and nothing frees its cuts before the session ends.
     """
     from doppel_spark.operators.lsh import pairs_from_buckets  # shared shape
     from doppel_spark.operators.stage import StageMaterializer
@@ -121,7 +127,8 @@ def simhash_near_pairs(
     # carries the SimHash UDF in its lineage, and everything below
     # (block-key explosion → bucket membership → verify joins) would
     # otherwise re-run that UDF once per evaluation path.
-    mat = StageMaterializer.for_input(df, prefix="simhash")
+    if mat is None:
+        mat = StageMaterializer.for_input(df, prefix="simhash")
     # force=False: the membership cut inside pairs_from_buckets is the
     # next blocking action and scans every fingerprint partition,
     # filling this cache in that job (r6 — saves one driver action)

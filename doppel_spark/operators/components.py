@@ -1,4 +1,4 @@
-"""Connected components over verified-pair edges — iterative DataFrame jobs.
+"""Connected components over verified-pair edges.
 
 Replaces the reference's implicit in-memory union of hash groups (each
 full-digest bucket IS a component, /root/reference/internal/finder/
@@ -6,14 +6,33 @@ finder.go:114-143) with the general graph case the near-dup tier needs:
 verified pairs form an arbitrary graph whose components are the dup
 clusters.
 
-Algorithm: **hash-min label propagation** — every node starts labeled
-with itself; each round every node takes the min of its own label and
-its neighbors' labels; converged when no label changes. Rounds are
-plain shuffled joins, so the work distributes; iteration count is
+One algorithm, **hash-min label propagation**: every node starts
+labeled with the min of itself and its neighbors (fused round 1); each
+further round every node takes the min of its own label and its
+neighbors' labels; converged when no label changes. Iteration count is
 bounded by the component diameter, and near-dup clusters are dense
 (LSH buckets emit stars/cliques), so 2–5 rounds dominate in practice.
 
-Scale hygiene:
+Two executions of it, picked per call:
+
+* **Driver** — small graphs in a persist-mode run (the materializer's
+  ``SMALL_INPUT_BYTES`` decision): one bounded
+  ``limit(BOUND + 1).collect()`` of the edge list; if it holds at most
+  :data:`BOUND` edges, the same rounds run as vectorized numpy over
+  rank-encoded node ids (``np.unique`` order is Spark's string and
+  long order, so the min rank is the min node). One bounded collect in
+  place of a fingerprint action (several Spark jobs under AQE) and a
+  re-planned join per round.
+* **Spark** — table-mode runs and graphs over the bound: rounds are
+  plain shuffled joins, so the work distributes.
+
+Both return the same rows, and share ``max_iter``/``strict`` and the
+partial labels of :class:`ComponentsNotConverged`. That is why the
+driver path is not a union-find: union-find reaches the fixed point in
+one pass, so it could neither fail at ``max_iter`` nor return the
+same partial labels.
+
+Spark execution, scale hygiene:
 * Every round is cut through the shared
   :class:`~doppel_spark.operators.stage.StageMaterializer`'s
   ``cut_iter`` — the iteration-aware cut. Without any cut the logical
@@ -39,10 +58,27 @@ Scale hygiene:
 
 from __future__ import annotations
 
+import warnings
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from doppel_spark.operators.stage import StageMaterializer
+
+#: Largest edge list finished on the driver. Sized against the smallest
+#: ``spark.driver.memory`` a session can have (Spark's 1g default, which
+#: is also ``spark.driver.maxResultSize``'s): a collected url edge is
+#: ~130 B of serialized rows in the JVM and ~300 B of Python objects
+#: plus numpy arrays, so 2^18 edges stay under ~80 MB, and the numpy
+#: rounds over them take well under a second. A constant, not a knob.
+BOUND = 1 << 18
+
+#: node types whose ``np.unique`` order equals Spark's ordering (UTF-8
+#: byte order is code point order; a collated string type is not here)
+_DRIVER_TYPES = (T.StringType(), T.LongType(), T.IntegerType())
 
 
 class ComponentsNotConverged(RuntimeError):
@@ -51,42 +87,47 @@ class ComponentsNotConverged(RuntimeError):
     no-silent-caps rule forbids that)."""
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "url_a",
-    dst: str = "url_b",
-    max_iter: int = 25,
-    strict: bool = True,
-    mat: StageMaterializer | None = None,
-) -> DataFrame:
-    """Components of the undirected graph given by ``edges``.
+def _driver_labels(
+    edges: DataFrame, src: str, dst: str, max_iter: int,
+) -> tuple[DataFrame, bool] | None:
+    """Label propagation on the driver: (labels frame, converged), or
+    None when the edge list is over :data:`BOUND`, holds a null, or has
+    a node type whose order numpy does not share with Spark."""
+    dtype = edges.schema[src].dataType
+    if dtype != edges.schema[dst].dataType or dtype not in _DRIVER_TYPES:
+        return None
+    rows = edges.select(src, dst).limit(BOUND + 1).collect()
+    if len(rows) > BOUND or any(x is None for r in rows for x in r):
+        return None
+    ends = np.array([x for r in rows for x in r],
+                    dtype=object if dtype == T.StringType() else np.int64)
+    nodes, rank = np.unique(ends, return_inverse=True)
+    # both orientations of every edge: label(u) takes label(v) along (u, v)
+    u = np.concatenate([rank[0::2], rank[1::2]])
+    v = np.concatenate([rank[1::2], rank[0::2]])
+    # fused round 1: label(u) = min(u, min(neighbors(u)))
+    labels = np.arange(len(nodes))
+    np.minimum.at(labels, u, v)
+    converged = False
+    for _ in range(max_iter):
+        new_labels = labels.copy()
+        np.minimum.at(new_labels, u, labels[v])
+        converged = np.array_equal(new_labels, labels)
+        labels = new_labels
+        if converged:
+            break
+    schema = T.StructType([T.StructField("node", dtype),
+                           T.StructField("label", dtype)])
+    frame = edges.sparkSession.createDataFrame(
+        pd.DataFrame({"node": nodes, "label": nodes[labels]}), schema)
+    return frame, converged
 
-    Returns (url string, cluster_rep string, cluster_id long); every
-    node appearing in any edge gets a row. Deterministic: the cluster
-    representative is the lexicographically smallest member.
 
-    ``mat`` — the caller's pipeline-scoped materializer (the near-dup
-    pipeline passes its own, so CC rounds inherit the size-appropriate
-    strategy picked for the whole run); ad-hoc callers get a one-off
-    size-aware materializer over the edge list.
-
-    Convergence needs ~diameter rounds (hash-min propagation); long
-    near-dup drift chains can exceed ``max_iter``. Non-convergence
-    **raises** :class:`ComponentsNotConverged` by default; with
-    ``strict=False`` it warns and returns the partial labels instead.
-    """
-    if mat is None:
-        mat = StageMaterializer.for_input(edges, prefix="cc")
-        # Ad-hoc path: nothing outside this function can reach the
-        # one-off materializer, so in table mode the final round's
-        # scratch parquet (which BACKS the returned labels frame — it
-        # must not be deleted here) would otherwise outlive the process
-        # even under a remote spark.doppel.scratchDir (ADVICE r4).
-        # Register its cleanup at interpreter exit; callers wanting
-        # earlier reclamation pass their own pipeline-scoped `mat`.
-        import atexit
-
-        atexit.register(mat.cleanup)
+def _spark_labels(
+    edges: DataFrame, src: str, dst: str, max_iter: int,
+    mat: StageMaterializer,
+) -> tuple[DataFrame, bool]:
+    """Label propagation as Spark jobs: (labels frame, converged)."""
     # sym joins into EVERY round's plan, so its cut must truncate the
     # LOGICAL plan (cut_iter), not just cache the data: a persist-only
     # cut leaves sym's full upstream lineage (the entire near-dup
@@ -159,6 +200,52 @@ def connected_components(
             break
         fp = new_fp
     mat.release(sym)
+    return labels, converged
+
+
+def connected_components(
+    edges: DataFrame,
+    src: str = "url_a",
+    dst: str = "url_b",
+    max_iter: int = 25,
+    strict: bool = True,
+    mat: StageMaterializer | None = None,
+) -> DataFrame:
+    """Components of the undirected graph given by ``edges``.
+
+    Returns (url, cluster_rep, cluster_id long), url and cluster_rep of
+    the node type; every node appearing in any edge gets a row.
+    Deterministic: the cluster representative is the smallest member.
+
+    ``mat`` — the caller's pipeline-scoped materializer (the near-dup
+    pipeline passes its own, so CC rounds inherit the size-appropriate
+    strategy picked for the whole run); ad-hoc callers get a one-off
+    size-aware materializer over the edge list.
+
+    In a persist-mode run an edge list of at most :data:`BOUND` rows is
+    collected once and the rounds run on the driver; otherwise every
+    round is a Spark job (module docstring). Both give the same rows.
+
+    Convergence needs ~diameter rounds (hash-min propagation); long
+    near-dup drift chains can exceed ``max_iter``. Non-convergence
+    **raises** :class:`ComponentsNotConverged` by default; with
+    ``strict=False`` it warns and returns the partial labels instead.
+    """
+    if mat is None:
+        mat = StageMaterializer.for_input(edges, prefix="cc")
+        # Ad-hoc path: nothing outside this function can reach the
+        # one-off materializer, so in table mode the final round's
+        # scratch parquet (which BACKS the returned labels frame — it
+        # must not be deleted here) would otherwise outlive the process
+        # even under a remote spark.doppel.scratchDir (ADVICE r4).
+        # Register its cleanup at interpreter exit; callers wanting
+        # earlier reclamation pass their own pipeline-scoped `mat`.
+        import atexit
+
+        atexit.register(mat.cleanup)
+    found = (_driver_labels(edges, src, dst, max_iter)
+             if mat.mode == "persist" else None)
+    labels, converged = found or _spark_labels(edges, src, dst, max_iter, mat)
 
     if not converged:
         msg = (f"connected_components: labels still changing after "
@@ -169,8 +256,6 @@ def connected_components(
             # last round's scratch table must not wait for cleanup()
             mat.release(labels)
             raise ComponentsNotConverged(msg)
-        import warnings
-
         warnings.warn(msg, RuntimeWarning, stacklevel=2)
 
     return labels.select(

@@ -249,8 +249,7 @@ def fuzzy_contamination_pairs(
             eval_sig.select(eval_id_col, F.col("signature").alias("_sig_e"))),
             eval_id_col)
         .withColumn("jaccard_est",
-                    signature_agreement(F.col("_sig_c"), F.col("_sig_e"),
-                                        cfg.num_perm))
+                    signature_agreement("_sig_c", "_sig_e", cfg.num_perm))
         .filter(F.col("jaccard_est")
                 >= cfg.jaccard_threshold - cfg.verify_margin)
         .select(id_col, eval_id_col, "jaccard_est")

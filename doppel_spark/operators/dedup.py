@@ -273,8 +273,7 @@ def cross_snapshot_neardup_pairs(
         .join(seen_need.select(seen_id, F.col("signature").alias("_sig_s")),
               seen_id)
         .withColumn("jaccard_est",
-                    signature_agreement(F.col("_sig_n"), F.col("_sig_s"),
-                                        cfg.num_perm))
+                    signature_agreement("_sig_n", "_sig_s", cfg.num_perm))
         .filter(F.col("jaccard_est")
                 >= cfg.jaccard_threshold - cfg.verify_margin)
         .select(new_id, seen_id, "jaccard_est")

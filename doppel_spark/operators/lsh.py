@@ -267,7 +267,7 @@ def verify_pairs(
     return (
         pairs.join(a, "url_a").join(b, "url_b")
         .withColumn("jaccard_est",
-                    signature_agreement(F.col("sig_a"), F.col("sig_b"), cfg.num_perm))
+                    signature_agreement("sig_a", "sig_b", cfg.num_perm))
         .filter(F.col("jaccard_est") >= cfg.jaccard_threshold - cfg.verify_margin)
         .select("url_a", "url_b", "jaccard_est")
     )

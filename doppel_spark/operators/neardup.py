@@ -50,7 +50,9 @@ class NearDupResult:
     pairs: DataFrame        # verified (url_a, url_b, jaccard_est)
     clusters: DataFrame     # (url, cluster_rep, cluster_id) — multi-doc clusters
     bucket_stats: DataFrame  # skew accounting (capped buckets, skipped pairs)
-    materializer: StageMaterializer | None = field(default=None, repr=False)
+    #: the run's materializers: the pipeline's, plus SimHash's when used
+    materializers: list[StageMaterializer] = field(default_factory=list,
+                                                   repr=False)
 
     def cluster_summary(self) -> DataFrame:
         """(cluster_id, n_docs, urls sorted) for multi-doc clusters."""
@@ -68,8 +70,8 @@ class NearDupResult:
         ``signatures``/``pairs``/``clusters``, so later reads raise —
         deliberately not named ``unpersist``, whose Spark contract
         (safe to call anytime, frames recompute) this does not honor."""
-        if self.materializer is not None:
-            self.materializer.cleanup()
+        for mat in self.materializers:
+            mat.cleanup()
 
 
 def _narrow(df: DataFrame, par: int) -> bool:
@@ -204,19 +206,25 @@ def near_dup_pipeline(
     )
 
     # duplicate docs rejoin as rep→member edges with Jaccard 1.0.
-    # Materialized ONCE before connected components: the CC edge
-    # symmetrization references `pairs` twice in a single job, and two
-    # concurrent recompute branches would each re-run the full
-    # verify + exact-edge lineage (incl. the sha256 corpus scan).
+    # Materialized ONCE: connected components and the caller (the
+    # result's `pairs`) both read it, and each un-cut read would re-run
+    # the full verify + exact-edge lineage (incl. the sha256 corpus
+    # scan). CC itself reads it once: small graphs in the one bounded
+    # collect of its driver execution, larger ones in the one-scan
+    # symmetrization its Spark rounds start from.
     pairs = _materialize(verified.union(
         exact_edges.withColumn("jaccard_est", F.lit(1.0))), "pairs")
     # everything downstream (CC, bucket stats) reads the sigs/pairs
     # scratch tables; the digest table has no remaining consumer
     edges = pairs.select("url_a", "url_b")
+    mats = [mat]
     if use_simhash:
         sh = reps.select(F.col(id_col), simhash_udf()(F.col(text_col)).alias("simhash"))
+        # its own transient materializer (a rerun on a durable store
+        # recomputes SimHash), owned here so cleanup() frees its cuts
+        mats.append(StageMaterializer.for_input(sh, prefix="simhash"))
         sh_pairs = simhash_near_pairs(sh, id_col=id_col, hamming_t=cfg.simhash_hamming,
-                                      bucket_cap=cfg.bucket_cap)
+                                      bucket_cap=cfg.bucket_cap, mat=mats[-1])
         edges = edges.union(sh_pairs.select("url_a", "url_b")).distinct()
 
     # CC rounds cut through the SAME materializer — one strategy for
@@ -228,4 +236,4 @@ def near_dup_pipeline(
         ["band_hash"], bucket_cap=cfg.bucket_cap)
     return NearDupResult(signatures=sigs, pairs=pairs,
                          clusters=comps, bucket_stats=stats,
-                         materializer=mat)
+                         materializers=mats)

@@ -75,7 +75,7 @@ def test_signature_agreement_column(spark):
     sa = np.array([1, 2, 3, 4], dtype="<i4").tobytes()
     sb = np.array([1, 2, 9, 4], dtype="<i4").tobytes()
     df = spark.createDataFrame([(sa, sb)], "sa binary, sb binary")
-    got = df.select(signature_agreement(F.col("sa"), F.col("sb"), 4).alias("j")) \
+    got = df.select(signature_agreement("sa", "sb", 4).alias("j")) \
             .collect()[0]["j"]
     assert got == pytest.approx(0.75)
 
@@ -185,6 +185,20 @@ def test_simhash_near_pairs(spark):
              for r in simhash_near_pairs(sh, hamming_t=3).collect()}
     assert ("a", "b") in pairs
     assert ("a", "c") not in pairs and ("c", "a") not in pairs
+
+
+@pytest.mark.parametrize("use_simhash", [False, True])
+def test_neardup_cleanup_frees_every_cache(spark, use_simhash):
+    """cleanup() releases every cut of the run, SimHash's included."""
+    spark.catalog.clearCache()
+    res = near_dup_pipeline(synth_pages(spark, 200), CFG,
+                            use_simhash=use_simhash)
+    res.clusters.count()
+    res.pairs.count()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert not cache.isEmpty()
+    res.cleanup()
+    assert cache.isEmpty()
 
 
 def test_simhash_deterministic(spark):

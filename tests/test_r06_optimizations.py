@@ -77,11 +77,33 @@ def test_signature_agreement_matches_numpy(spark):
     got = {
         r["i"]: r["agree"]
         for r in df.select(
-            "i", signature_agreement(F.col("sa"), F.col("sb"), num_perm)
+            "i", signature_agreement("sa", "sb", num_perm)
             .alias("agree")).collect()
     }
     for i, exp in enumerate(expected):
         assert got[i] == pytest.approx(exp, abs=0), (i, got[i], exp)
+
+
+@pytest.mark.parametrize("num_perm", [4, 80, 128])
+def test_signature_agreement_by_name_matches_numpy(spark, num_perm):
+    """The one-parse SQL expression, addressed by column name, equals the
+    numpy reference — including a name that needs backtick quoting."""
+    rng = np.random.RandomState(num_perm)
+    rows, expected = [], []
+    for i in range(12):
+        a = rng.randint(-(2**31), 2**31 - 1, num_perm).astype("<i4")
+        b = a.copy()
+        flip = rng.choice(num_perm, size=rng.randint(0, num_perm + 1),
+                          replace=False)
+        b[flip] = rng.randint(-(2**31), 2**31 - 1, len(flip)).astype("<i4")
+        rows.append((i, a.tobytes(), b.tobytes()))
+        expected.append(float((a == b).sum()) / num_perm)
+    df = spark.createDataFrame(rows, "i long, sa binary, sb binary")
+    odd = "sig `b`.x y"
+    df = df.withColumnRenamed("sb", odd)
+    got = {r["i"]: r["agree"] for r in df.select(
+        "i", signature_agreement("sa", odd, num_perm).alias("agree")).collect()}
+    assert got == {i: exp for i, exp in enumerate(expected)}
 
 
 # ---------------------------------------------------------------------------
