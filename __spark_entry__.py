@@ -251,7 +251,10 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unspread documents scan — for the exact-dedup funnel family.
+    """Unspread documents scan — for the exact-dedup funnel family and
+    the queries whose only per-row work is one ``regexp_count``
+    (``packed_sequences``, ``token_budget_cut``: the spread's extra
+    shuffle costs more than it saves them, measured 0.86×).
 
     The funnel's per-row work is bounded-sample hashing by design
     (unique-size docs are never digested; quick digests read ≤16 KiB),
@@ -745,7 +748,7 @@ def _q_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doppel_spark.functions.text import token_count
     from doppel_spark.operators.budget import pack_sequences
 
-    return pack_sequences(_docs(spark, sf_dir), PACK_BUDGET, N_SHARDS,
+    return pack_sequences(_docs_raw(spark, sf_dir), PACK_BUDGET, N_SHARDS,
                           token_count("text"), seed=SHARD_SEED)
 
 
@@ -870,7 +873,7 @@ def _q_token_budget_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold is scale-independent and bit-identical to the oracle).
     The driver-side per-block cumsum makes this non-SQL internally, but
     the SEMANTICS are one window — mirrored exactly in DuckDB."""
-    docs = _docs(spark, sf_dir)
+    docs = _docs_raw(spark, sf_dir)
     total = int(docs.select(
         F.sum(token_count("text")).alias("t")).collect()[0]["t"] or 0)
     budget = (2 * total) // 5

@@ -76,13 +76,25 @@ class NearDupResult:
 
 def _narrow(df: DataFrame, par: int) -> bool:
     """Whether ``df`` runs on fewer than ``par`` tasks, without running a
-    job. A plan without an exchange reports its splits from planning; one
-    with an exchange would run it, so the size estimate stands in: AQE
-    coalesces a shuffle below ``par`` partitions only when it holds less
-    than ``coalescePartitions.minPartitionSize`` per core."""
-    if "Exchange" not in physical_plan(df):
+    job, under the plan mode in force when it is asked. A plan without an
+    exchange reports its splits from planning; one with an exchange would
+    run it, so the plan's own rules stand in. A static plan states its
+    root's partitioning: a hash exchange yields exactly its declared
+    count (``spark.sql.shuffle.partitions`` unless repartitioned), while
+    a limit, a global sort-limit or an unpartitioned window above it
+    yields one. When the plan cannot tell (a union of unlike children, a
+    scan-rooted join side) and under AQE the size estimate stands in:
+    AQE coalesces a shuffle below ``par`` partitions only when it holds
+    less than ``coalescePartitions.minPartitionSize`` per core."""
+    plan = physical_plan(df)
+    if "Exchange" not in plan:
         return df.rdd.getNumPartitions() < par
     spark = df.sparkSession
+    if "AdaptiveSparkPlan" not in plan:
+        n = df._jdf.queryExecution().executedPlan().outputPartitioning() \
+            .numPartitions()
+        if n > 0:
+            return n < par
     min_part = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
     size = plan_size_bytes(df)
@@ -104,17 +116,32 @@ def near_dup_pipeline(
     itself at ≳300 k docs, where it took local[16] from 185 s to 44 s.
     One built with a ``CheckpointStore`` makes the cuts durable, and a
     rerun on that store recomputes only CC (and the SimHash pairs). See
-    :class:`~doppel_spark.operators.stage.StageMaterializer`."""
+    :class:`~doppel_spark.operators.stage.StageMaterializer`.
+
+    The run's own actions (the cuts, SimHash's cuts, connected
+    components) plan under ``mat.static_plan(base)``: a small input
+    without a store, whose size estimate is within
+    ``spark.sql.autoBroadcastJoinThreshold``, turns AQE off for them,
+    halving their Spark jobs; the session's setting is restored on
+    return, and the returned frames plan under it."""
     cfg = cfg or NearDupConfig()
     base = pages.select(F.col(id_col), F.col(text_col))
     if mat is None:
         mat = StageMaterializer.for_input(base, prefix="neardup")
+    with mat.static_plan(base):
+        return _run(base, cfg, id_col, text_col, use_simhash, mat)
+
+
+def _run(base: DataFrame, cfg: NearDupConfig, id_col: str, text_col: str,
+         use_simhash: bool, mat: StageMaterializer) -> NearDupResult:
+    """The body of :func:`near_dup_pipeline`, under its plan scope."""
     _materialize = mat.cut  # stage cuts below; see class docstring
 
     # exact-dedup pre-pass: one representative (min id) per distinct text.
     # The digest groupBy ships only (id, digest) — the text never
     # shuffles; representatives are fetched back with a semi-join whose
-    # build side (the rep-id list) AQE broadcasts.
+    # build side (the rep-id list) is broadcast: from the planner's size
+    # estimate under a small input's static plan, by AQE at scale.
     # (id, digest) is consumed by three branches (rep_ids groupBy, the
     # exact-edge join, and — via the semi-join — the representatives
     # scan), two of which run as concurrent broadcast jobs: without a
@@ -193,7 +220,7 @@ def near_dup_pipeline(
                               bucket_cap=cfg.bucket_cap), "cand")
     verified_rid = verify_pairs(cand_rid, sigs.select("rid", "signature"),
                                 cfg, id_col="rid")
-    # map rids back to urls (pairs are small; AQE broadcasts them)
+    # map rids back to urls (pairs are small; both plan modes broadcast them)
     rid_url = sigs.select("rid", F.col(id_col))
     verified = (
         verified_rid

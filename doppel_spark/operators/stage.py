@@ -34,6 +34,43 @@ how to cut a stage, with the strategy picked by input size and master:
   lineage. ``cut_iter``/``release``/``cleanup`` stay transient: CC
   rounds are recomputed from the durable stage that feeds them.
 
+Plan mode rides on the same decision, for pipelines that opt in by
+running their body under :meth:`StageMaterializer.static_plan` (today
+only ``near_dup_pipeline``; every other ``for_input`` caller plans
+under the session's setting whatever its policy). A small input (the
+persist policy) whose size estimate is also within Spark's
+``spark.sql.autoBroadcastJoinThreshold`` plans those actions
+statically: the scope turns AQE off on the input's session for their
+duration. At this size every cut and the CC collect are bound by
+Spark's per-job fixed cost, and AQE splits each action into one job
+per shuffle stage; a static plan runs it as one job (measured: 48 →
+24 jobs per 2000-doc SimHash run, same clusters). The broadcast bound
+is what keeps a static plan's joins broadcast: without AQE the
+planner broadcasts a side only when its *estimate* is within the
+threshold, and a pipeline's intermediate estimates are its input's
+estimate scaled by row widths, so a larger input could plan
+sort-merge joins, among them the representatives semi-join, which
+would shuffle the corpus text. Above the bound (and
+under every other policy) AQE picks broadcasts from runtime sizes.
+The size decision is kept apart from ``mode`` (``small_input``)
+because the plan choice is about data size, not about where a cut
+lives:
+
+* the **table** policy keeps AQE: at ≳256 MB its runtime coalescing
+  and skew-join split (the bucket joins are where LSH skew lands) pay
+  for the extra jobs;
+* the **non-local fallback** keeps AQE: it turns a *large* input into
+  persist only because no scratch dir is executor-visible;
+* the **durable** policy keeps AQE: its cuts are checkpoint writes
+  whose cost is I/O, not job count (a static plan measured no gain on
+  the checkpointed job at 2000 docs).
+
+``spark.sql.adaptive.enabled`` is a session setting read when an
+action plans its query, so the scope holds for whatever runs on that
+session meanwhile: two pipelines sharing one session from two threads
+are unsupported (the second could plan statically, or restore AQE
+under the first).
+
 Lifetime: scratch tables live under a per-session temp dir reclaimed at
 process exit; ``cleanup()`` reclaims a materializer's tables/caches
 early. In persist mode the caches stay referenced by the returned
@@ -43,10 +80,12 @@ DataFrames, so ``cleanup()`` must only run after consumers finish.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import shutil
 import tempfile
 import uuid
 import warnings
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
@@ -91,6 +130,9 @@ class StageMaterializer:
                  prefix: str = "stage",
                  store: CheckpointStore | None = None) -> None:
         assert mode in ("table", "persist")
+        #: the size decision, kept apart from ``mode``: the non-local
+        #: fallback below turns a LARGE input into persist
+        self.small_input = mode == "persist"
         self._local = (spark.sparkContext.master or "").startswith("local")
         self._scratch_root: str | None = None
         if mode == "table" and not self._local:
@@ -136,6 +178,30 @@ class StageMaterializer:
             small_input = size is None or size < SMALL_INPUT_BYTES
         return cls(df.sparkSession, mode="persist" if small_input else "table",
                    prefix=prefix, store=store)
+
+    @contextlib.contextmanager
+    def static_plan(self, df: DataFrame) -> Iterator[None]:
+        """Plan the actions run in this block without AQE when the
+        pipeline input ``df`` is small, its size estimate is within
+        ``spark.sql.autoBroadcastJoinThreshold`` and the policy is not
+        durable (module docstring); otherwise a no-op. The session's
+        previous setting is restored on exit, also when the block
+        raises. Frames built inside and consumed after the block plan
+        under the caller's setting."""
+        conf = self.spark._jsparkSession.sessionState().conf()
+        static = (self.small_input and self.store is None
+                  and (size := plan_size_bytes(df)) is not None
+                  and size <= conf.autoBroadcastJoinThreshold())
+        if not static:
+            yield
+            return
+        key = "spark.sql.adaptive.enabled"
+        prior = self.spark.conf.get(key)
+        self.spark.conf.set(key, "false")
+        try:
+            yield
+        finally:
+            self.spark.conf.set(key, prior)
 
     def _table_root(self) -> str:
         if self._scratch_root is None:

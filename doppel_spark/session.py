@@ -2,9 +2,16 @@
 
 Centralizes the knobs that matter for both local testing (local[N],
 one JVM) and the target deployment (multi-executor cluster at 100 TB):
-AQE on (runtime coalescing + skew-join handling), Arrow on (every
-pandas UDF ships Arrow batches), shuffle partitions sized to the
-parallelism level instead of the 200 default.
+AQE on as the session default (runtime coalescing + skew-join
+handling), Arrow on (every pandas UDF ships Arrow batches), shuffle
+partitions sized to the parallelism level instead of the 200 default.
+
+The one exception to AQE: a near-dup pipeline over a small input
+(size estimate within ``spark.sql.autoBroadcastJoinThreshold``) plans
+its own actions statically and restores the setting on return
+(``StageMaterializer.static_plan``, operators/stage.py). At that size
+every action is bound by per-job fixed cost, and AQE runs one job per
+shuffle stage.
 """
 
 from __future__ import annotations

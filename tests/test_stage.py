@@ -4,13 +4,18 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from doppel_spark.config import NearDupConfig
+from doppel_spark.corpus import synth_pages
+from doppel_spark.operators.neardup import near_dup_pipeline
 from doppel_spark.operators.stage import (
     SMALL_INPUT_BYTES,
     StageMaterializer,
     plan_size_bytes,
 )
+from doppel_spark.plans.inspect import physical_plan
 
 
 def test_plan_size_bytes_parquet_scan_accurate(spark, tmp_path):
@@ -188,3 +193,149 @@ def test_durable_cut_is_a_stage_and_iter_cuts_stay_transient(spark, tmp_path):
     # the durable stage belongs to the store, not the materializer
     assert mat.paths == [] and store.is_complete("s1")
     assert spark.read.parquet(os.path.join(store.root, "s1")).count() == 40
+
+
+# --- plan mode: a small input plans the pipeline's actions statically ---
+
+AQE = "spark.sql.adaptive.enabled"
+
+
+@pytest.fixture()
+def aqe_prior(spark, request):
+    """Sets ``spark.sql.adaptive.enabled`` to the parametrized prior and
+    puts the session default back afterwards."""
+    before = spark.conf.get(AQE)
+    spark.conf.set(AQE, request.param)
+    yield request.param
+    spark.conf.set(AQE, before)
+
+
+@pytest.mark.parametrize("aqe_prior", ["true", "false"], indirect=True)
+def test_neardup_restores_aqe_after_return_and_raise(spark, aqe_prior,
+                                                     monkeypatch):
+    from doppel_spark.operators import neardup
+
+    pages = synth_pages(spark, 120)
+    res = neardup.near_dup_pipeline(pages, NearDupConfig())
+    assert spark.conf.get(AQE) == aqe_prior
+    res.cleanup()
+
+    seen = []
+
+    def boom(edges, mat=None, **kw):
+        seen.append(spark.conf.get(AQE))
+        raise RuntimeError("components failed")
+
+    monkeypatch.setattr(neardup, "connected_components", boom)
+    with pytest.raises(RuntimeError, match="components failed"):
+        neardup.near_dup_pipeline(pages, NearDupConfig())
+    assert seen == ["false"]  # the scope covers connected components
+    assert spark.conf.get(AQE) == aqe_prior
+    spark.catalog.clearCache()
+
+
+def _cut_plans(spark, monkeypatch, mat, use_simhash):
+    """Physical plans of every frame cut during one pipeline run."""
+    plans = []
+    real_cut = StageMaterializer.cut
+
+    def spy(self, df, name, force=True):
+        plans.append(physical_plan(df))
+        return real_cut(self, df, name, force=force)
+
+    monkeypatch.setattr(StageMaterializer, "cut", spy)
+    res = near_dup_pipeline(synth_pages(spark, 120), NearDupConfig(),
+                            use_simhash=use_simhash, mat=mat)
+    res.clusters.collect()
+    res.cleanup()
+    assert any("Exchange" in p for p in plans)  # non-vacuous
+    return plans
+
+
+def test_small_persist_run_plans_statically(spark, monkeypatch):
+    mat = StageMaterializer(spark, mode="persist", prefix="neardup")
+    plans = _cut_plans(spark, monkeypatch, mat, use_simhash=True)
+    assert not any("AdaptiveSparkPlan" in p for p in plans)
+    # every join still broadcasts: the corpus text never shuffles
+    assert any("BroadcastHashJoin" in p for p in plans)
+    assert not any("SortMergeJoin" in p for p in plans)
+
+
+@pytest.mark.parametrize("policy", ["table", "durable"])
+def test_table_and_durable_policies_keep_aqe(spark, tmp_path, monkeypatch,
+                                             policy):
+    from doppel_spark.checkpoint import CheckpointStore
+
+    store = (CheckpointStore(spark, str(tmp_path / "ck"))
+             if policy == "durable" else None)
+    mode = "table" if policy == "table" else "persist"
+    mat = StageMaterializer(spark, mode=mode, prefix="neardup", store=store)
+    plans = _cut_plans(spark, monkeypatch, mat, use_simhash=False)
+    assert all("AdaptiveSparkPlan" in p for p in plans if "Exchange" in p)
+
+
+def test_non_local_fallback_persists_with_aqe(spark, monkeypatch):
+    # a LARGE input on a cluster without spark.doppel.scratchDir falls
+    # back to persist cuts; its joins can still be skewed, so AQE stays
+    assert spark.conf.get("spark.doppel.scratchDir", None) is None
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+    with pytest.warns(RuntimeWarning, match="falling back to persist"):
+        mat = StageMaterializer(spark, mode="table", prefix="neardup")
+    monkeypatch.undo()
+    assert mat.mode == "persist" and not mat.small_input
+    plans = _cut_plans(spark, monkeypatch, mat, use_simhash=False)
+    assert all("AdaptiveSparkPlan" in p for p in plans if "Exchange" in p)
+
+
+def test_narrow_answers_for_the_static_plan(spark):
+    # a 1000-row aggregate: AQE would coalesce its exchange to one
+    # partition (narrow); a static plan keeps shuffle.partitions (= par)
+    from pyspark.sql import Window
+
+    from doppel_spark.operators.neardup import _narrow
+
+    def agg():
+        return spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+
+    def stem():
+        # the shape of the entry module's planted-stem input: a hash
+        # aggregate under an orderBy().limit() and an unpartitioned
+        # window, which leave one partition, not shuffle.partitions
+        return (agg().orderBy("k").limit(5)
+                .withColumn("rk", F.row_number().over(Window.orderBy("k"))))
+
+    def stems():
+        sel = stem()
+        return sel.filter("rk < 3").union(sel.filter("rk >= 3"))
+
+    par = spark.sparkContext.defaultParallelism
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == par
+    assert _narrow(agg(), par)
+    with StageMaterializer(spark, mode="persist").static_plan(agg()):
+        assert "AdaptiveSparkPlan" not in physical_plan(agg())
+        assert not _narrow(agg(), par)
+        assert _narrow(agg(), par + 1)
+        for frame in (stem, stems):
+            assert "Exchange hashpartitioning" in physical_plan(frame())
+            assert frame().rdd.getNumPartitions() < par
+            assert _narrow(frame(), par)
+    assert _narrow(agg(), par)
+
+
+@pytest.mark.parametrize("threshold", ["1k", "-1"])
+def test_static_plan_needs_input_within_broadcast_threshold(spark, threshold):
+    # without AQE a join broadcasts only from planner estimates, which
+    # scale with the input's: past the threshold the scope keeps AQE
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    mat = StageMaterializer(spark, mode="persist")
+    small = spark.range(1000)  # estimate 8000 B
+    try:
+        with mat.static_plan(small):
+            assert spark.conf.get(AQE) == "false"
+        spark.conf.set(key, threshold)
+        with mat.static_plan(small):
+            assert spark.conf.get(AQE) == "true"
+    finally:
+        spark.conf.set(key, before)
+    assert spark.conf.get(AQE) == "true"
