@@ -1414,8 +1414,8 @@ def _q_semantic_dedup_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_ngram_jaccard_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard (the high-precision verification quantity of
-    ``ngram_jaccard_dedup``) over a DETERMINISTIC id-derived pair set —
+    """Exact n-gram Jaccard (the audit quantity of
+    ``lsh.verify_pairs_exact``) over a DETERMINISTIC id-derived pair set —
     not LSH-derived, so a DuckDB oracle can reproduce the shingle sets
     and value-check the Jaccard itself. Pairs: each first-30 doc vs an
     in-query token-appended copy (known mid-range Jaccard) plus each

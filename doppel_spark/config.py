@@ -72,13 +72,6 @@ def format_bytes(n: int) -> str:
     return f"{v:.1f} EB"
 
 
-def _split_patterns(csv: str | None) -> list[str]:
-    """Comma-split, trim, drop empties (filter.go:130-144)."""
-    if not csv:
-        return []
-    return [p.strip() for p in csv.split(",") if p.strip()]
-
-
 def _glob_to_like(pat: str) -> str:
     """Translate a filesystem glob to a SQL LIKE pattern.
 

@@ -26,7 +26,7 @@ Two tiers, mirroring the multimodal decoder split
   multimodal ``decoder="real"`` stub. Integration point: an
   Arrow-batched ``mapInPandas`` over ``html`` — the Spark-side shape
   (binary in, string out, per-batch loop) is already proven by
-  ``extract_media_features``.
+  ``multimodal.resize_media``.
 
 Reference tie: the reference trusts file bytes as read
 (/root/reference/internal/hasher/hasher.go reads content verbatim);
@@ -65,7 +65,7 @@ def extract_pages(
         raise NotImplementedError(
             "real boilerplate-stripping extraction requires HTML libraries "
             "not present in this environment; plug a mapInPandas extractor "
-            "in here (see extract_media_features for the batch shape)"
+            "in here (see multimodal.resize_media for the batch shape)"
         )
     if extractor != "wrapper":
         raise ValueError(f"unknown extractor {extractor!r}")

@@ -99,12 +99,3 @@ def anchor_edges(pages: DataFrame, url_col: str = "url",
         .filter((F.col("dst") != "") & (F.col("dst") != F.col("src"))))
     return rows.groupBy("src", "dst", "anchor").agg(
         F.count(F.lit(1)).alias("n"))
-
-
-def host_rank_from_pages(pages: DataFrame, url_col: str = "url",
-                         html_col: str = "html", **rank_kwargs) -> DataFrame:
-    """pages → outlink graph → domain rank, composed end to end."""
-    from doppel_spark.operators.graph import host_rank
-
-    return host_rank(host_edges(pages, url_col, html_col),
-                     weight="w", **rank_kwargs)

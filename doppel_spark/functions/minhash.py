@@ -1,4 +1,4 @@
-"""MinHash signatures over word shingles — vectorized pandas/Arrow UDF.
+"""MinHash signatures over word shingles — a vectorized Arrow kernel.
 
 North-rule extension (no reference counterpart): generalizes the
 reference's cheap-signal-first design (quick hash before full hash,
@@ -30,9 +30,10 @@ Two pitfalls this design dodges, deliberately:
 
 Python touches each Arrow *batch* a constant number of times — zero
 per-document Python (:func:`_batch_sig_matrix`); all inner math is
-numpy uint64 with natural wraparound. :func:`token_hashes` /
-:func:`shingle_hashes` remain as the per-document semantic spec the
-batch kernel is asserted against in tests.
+numpy uint64 with natural wraparound. The per-document semantic spec
+the batch kernel is asserted against (``token_hashes`` /
+``shingle_hashes``, one document at a time) lives with the tests, in
+``tests/minhash_spec.py``.
 
 Short docs (< k tokens) shingle as their raw token set; empty docs get
 the single empty-string shingle — every doc has a valid signature, so
@@ -126,63 +127,6 @@ _TOK_LUT = np.ones(256, dtype=bool)
 _TOK_LUT[list(_WS_BYTES)] = False
 
 
-def token_hashes(text: str) -> np.ndarray:
-    """64-bit hashes of the whitespace tokens of ``text`` — zero Python
-    string objects.
-
-    The UTF-8 bytes are hashed once with a prefix polynomial
-    P[i] = Σ_{j<i} (b[j]+1)·B^j (mod 2⁶⁴); a token spanning [s, e) then
-    hashes to (P[e] − P[s]) · B⁻ˢ — equal byte spans ⇒ equal hashes —
-    and a splitmix64 avalanche spreads the result over the full 64-bit
-    space. Everything is vectorized over the byte array: cost is O(len)
-    numpy ops per document, independent of token count.
-    """
-    data = np.frombuffer((text or "").encode("utf-8"), dtype=np.uint8)
-    n = data.size
-    if n == 0:
-        return np.zeros(0, dtype=np.uint64)
-    is_tok = _TOK_LUT[data]
-    prev = np.empty(n, dtype=bool)
-    prev[0] = False
-    prev[1:] = is_tok[:-1]
-    nxt = np.empty(n, dtype=bool)
-    nxt[-1] = False
-    nxt[:-1] = is_tok[1:]
-    starts = np.nonzero(is_tok & ~prev)[0]
-    if starts.size == 0:
-        return np.zeros(0, dtype=np.uint64)
-    ends = np.nonzero(is_tok & ~nxt)[0] + 1
-    with np.errstate(over="ignore"):
-        pw = np.empty(n + 1, dtype=np.uint64)
-        pw[0] = 1
-        np.cumprod(np.full(n, _TOKEN_BASE, dtype=np.uint64), out=pw[1:])
-        ipw = np.empty(n + 1, dtype=np.uint64)
-        ipw[0] = 1
-        np.cumprod(np.full(n, _TOKEN_BASE_INV, dtype=np.uint64), out=ipw[1:])
-        pre = np.empty(n + 1, dtype=np.uint64)
-        pre[0] = 0
-        np.cumsum((data.astype(np.uint64) + np.uint64(1)) * pw[:n], out=pre[1:])
-        return splitmix64((pre[ends] - pre[starts]) * ipw[starts])
-
-
-def shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Unique 64-bit shingle hashes of a document, string-free.
-
-    Each k-gram combines its token hashes with a rolling polynomial
-    (sliding-window dot product in uint64). Equal shingles ⇒ equal
-    hashes by construction.
-    """
-    th = token_hashes(text)
-    if th.size == 0:
-        return np.zeros(1, dtype=np.uint64)
-    if th.size < k:
-        return np.unique(th)
-    with np.errstate(over="ignore"):
-        weights = _POLY_BASE ** np.arange(k, dtype=np.uint64)
-        windows = np.lib.stride_tricks.sliding_window_view(th, k)
-        return np.unique((windows * weights[None, :]).sum(axis=1, dtype=np.uint64))
-
-
 class _BufPool:
     """Per-worker buffer pool for the batch signature kernel.
 
@@ -237,9 +181,9 @@ def _batch_sig_matrix(texts, pool: _BufPool, consts: np.ndarray,
                       seg_shingles: int = 1 << 16,
                       perm_chunk: int = 8) -> np.ndarray:
     """(n_docs, num_perm) int32 signature matrix for a whole Arrow batch
-    — value-identical to the per-doc spec (min over
-    ``shingle_hashes(text, k) >> 32`` of ``const * h`` mod 2³²; asserted
-    against it in tests) with ZERO per-document Python.
+    — value-identical to the per-doc spec (min over the document's
+    shingle hashes ``>> 32`` of ``const * h`` mod 2³²; asserted against
+    ``tests/minhash_spec.py``) with ZERO per-document Python.
 
     The whole batch is processed as one byte array (pyarrow exposes the
     UTF-8 buffer + offsets): token spans come from one boolean pass with
@@ -338,7 +282,7 @@ def _batch_sig_matrix(texts, pool: _BufPool, consts: np.ndarray,
         # shingle stream: window hashes (k shifted multiply-adds) where
         # the window stays inside one doc; short docs use raw token
         # hashes (set semantics — min ignores duplicates); empty docs
-        # the single 0 hash (== shingle_hashes("") semantics)
+        # the single 0 hash (the spec's empty-document shingle)
         nw = max(nt - k + 1, 0)
         wh = pool.get("wh", nw, np.uint64)
         okm = pool.get("okm", nw, bool)
@@ -446,11 +390,6 @@ def band_hashes(sig_matrix: np.ndarray, bands: int, rows_per_band: int) -> np.nd
 SIG_BYTES_PER_PERM = 4
 
 
-def unpack_signature(buf: bytes | bytearray) -> np.ndarray:
-    """Packed signature cell → int32 vector (audit/test path)."""
-    return np.frombuffer(bytes(buf), dtype="<i4")
-
-
 def _packed_sig_arrow(sigs: np.ndarray, num_perm: int):
     """(n, num_perm) int32 matrix → pyarrow ``binary`` column, O(1)
     allocations per batch (offsets from one arange; the data buffer IS
@@ -473,9 +412,8 @@ def sig_bands_arrow_columns(texts, pool: _BufPool, consts: np.ndarray,
     The return path is O(1) Python objects per BATCH: the signature
     column is the kernel's contiguous numpy output reinterpreted as one
     Arrow binary buffer, the band column its numpy output + arange
-    offsets — no per-row Python objects, which the pandas-UDF return
-    path pays for every document. Values are identical to
-    :func:`minhash_sig_bands_udf` (same kernel, same packing).
+    offsets — no per-row Python objects, which a pandas-UDF return
+    path would pay for every document.
     """
     import pyarrow as pa
 
@@ -487,62 +425,6 @@ def sig_bands_arrow_columns(texts, pool: _BufPool, consts: np.ndarray,
         pa.array(np.arange(0, (n + 1) * bands, bands, dtype=np.int32)),
         pa.array(bh.reshape(-1)))
     return _packed_sig_arrow(sigs, num_perm), band_col
-
-
-def minhash_sig_bands_udf(num_perm: int = 128, k: int = 5, seed: int = 42,
-                          bands: int = 32):
-    """pandas UDF: text → struct(signature binary, bands array<long>).
-
-    One shingle pass computes BOTH the MinHash signature and its LSH
-    band-bucket hashes; downstream banding is then a plain (codegen'd)
-    ``explode`` of the bands column — no interpreted HOF in the hot path.
-
-    Signatures are 32-bit, binary-packed end to end (see
-    :data:`SIG_BYTES_PER_PERM` and :func:`perm_constants`): half the
-    bytes through the multiply/min kernel, and ONE contiguous cell —
-    not 128 typed elements — through the Arrow return batches, the
-    signature scratch table, and the verification joins, all of which
-    are memory-bandwidth-bound before they are CPU-bound. The return
-    here still pays one Python bytes object per document; the
-    ``mapInArrow`` stage (lsh.signature_stage) is the zero-per-row
-    transport the flagship uses.
-    """
-    consts = perm_constants(num_perm, seed)
-    r = num_perm // bands
-    w = num_perm * SIG_BYTES_PER_PERM
-    pool = _BufPool()  # per-worker after cloudpickle deserialization
-
-    @F.pandas_udf(T.StructType([
-        T.StructField("signature", T.BinaryType()),
-        T.StructField("bands", T.ArrayType(T.LongType())),
-    ]))
-    def sig_bands(texts: pd.Series) -> pd.DataFrame:
-        sigs = _batch_sig_matrix(texts, pool, consts, num_perm, k)
-        bh = (band_hashes(sigs, bands, r) if len(sigs)
-              else np.empty((0, bands), np.int64))
-        flat = np.ascontiguousarray(sigs).tobytes()
-        return pd.DataFrame({
-            "signature": [flat[i * w:(i + 1) * w] for i in range(len(sigs))],
-            "bands": list(bh)})
-
-    return sig_bands
-
-
-def minhash_signature_udf(num_perm: int = 128, k: int = 5, seed: int = 42):
-    """pandas UDF: text → binary signature of ``num_perm`` packed
-    int32-LE values (identical packing to the combined
-    signature+bands UDF)."""
-    consts = perm_constants(num_perm, seed)
-    w = num_perm * SIG_BYTES_PER_PERM
-    pool = _BufPool()  # per-worker after cloudpickle deserialization
-
-    @F.pandas_udf(T.BinaryType())
-    def minhash(texts: pd.Series) -> pd.Series:
-        sigs = _batch_sig_matrix(texts, pool, consts, num_perm, k)
-        flat = np.ascontiguousarray(sigs).tobytes()
-        return pd.Series([flat[i * w:(i + 1) * w] for i in range(len(sigs))])
-
-    return minhash
 
 
 def signature_agreement(sig_a: str, sig_b: str, num_perm: int) -> Column:

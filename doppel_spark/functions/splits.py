@@ -102,17 +102,6 @@ def assign_split(key: Column | str, weights: dict[str, float],
     return out.alias("split")
 
 
-def hash_sample(df: DataFrame, fraction: float, key_col: str,
-                seed: str = "sample") -> DataFrame:
-    """Deterministic ~``fraction`` sample: keep rows whose bucket falls
-    below ``floor(fraction * BUCKETS)``. Same rows every run, every
-    partitioning, every engine."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    thr = int(fraction * BUCKETS)
-    return df.filter(uniform_bucket(key_col, seed) < F.lit(thr))
-
-
 def stratified_sample(df: DataFrame, fractions: dict[str, float],
                       key_col: str, by: str,
                       seed: str = "sample") -> DataFrame:

@@ -189,27 +189,6 @@ def distinct_token_ratio(text: Column | str) -> Column:
     )
 
 
-def quality_score(text: Column | str, min_tokens: int = 20,
-                  max_tokens: int = 100_000) -> Column:
-    """Heuristic [0,1] quality score for filter thresholds.
-
-    0.4·length-window + 0.3·stopword presence + 0.2·non-repetition +
-    0.1·low punctuation. Deliberately simple, monotone, and
-    SQL-expressible — the point is the *pipeline op* (scorable,
-    thresholdable, pushdown-able), not linguistic sophistication.
-    """
-    t = _col_of(text)
-    n = F.regexp_count(t, F.lit(r"\S+"))
-    len_ok = F.when((n >= min_tokens) & (n <= max_tokens), 1.0).otherwise(0.0)
-    stop_sig = F.least(stopword_ratio(t) * 4.0, F.lit(1.0))
-    rep_sig = distinct_token_ratio(t)
-    punct_sig = F.lit(1.0) - F.least(punct_ratio(t) * 5.0, F.lit(1.0))
-    return (
-        F.round(0.4 * len_ok + 0.3 * stop_sig + 0.2 * rep_sig + 0.1 * punct_sig, 6)
-        .alias("quality_score")
-    )
-
-
 def quality_score_micros(text: Column | str, min_tokens: int = 20,
                          max_tokens: int = 100_000) -> Column:
     """``floor(quality × 10⁶)`` as a long — float-free form for exact

@@ -210,50 +210,16 @@ def fuzzy_contamination_pairs(
     (/root/reference/internal/finder/finder.go:84-143), with MinHash
     agreement replacing gram equality.
     """
-    import atexit
-
     from doppel_spark.config import NearDupConfig
-    from doppel_spark.functions.minhash import signature_agreement
-    from doppel_spark.operators.lsh import band_keys, signature_stage
-    from doppel_spark.operators.stage import StageMaterializer
+    from doppel_spark.operators.lsh import _cross_pairs, _cut_signatures
 
     cfg = cfg or NearDupConfig()
-    corp_in = corpus.select(F.col(id_col), F.col(text_col))
-    mat = StageMaterializer.for_input(corp_in, prefix="fuzzycontam")
-    atexit.register(mat.cleanup)
-
-    corp_sig = mat.cut(
-        signature_stage(corp_in, cfg, id_col=id_col, text_col=text_col),
-        "corp_sig")
-    eval_sig = mat.cut(
-        signature_stage(
-            eval_df.select(F.col(eval_id_col), F.col(text_col)),
-            cfg, id_col=eval_id_col, text_col=text_col),
-        "eval_sig")
-
-    corp_keys = band_keys(corp_sig, cfg, id_col=id_col)
-    eval_keys = band_keys(eval_sig, cfg, id_col=eval_id_col)
-    cands = (
-        corp_keys.join(F.broadcast(eval_keys), "band_hash")
-        .select(id_col, eval_id_col)
-        .distinct()
-    )
-
-    needed = corp_sig.join(
-        cands.select(id_col).distinct(), id_col, "left_semi")
-    return (
-        cands
-        .join(needed.select(id_col, F.col("signature").alias("_sig_c")),
-              id_col)
-        .join(F.broadcast(
-            eval_sig.select(eval_id_col, F.col("signature").alias("_sig_e"))),
-            eval_id_col)
-        .withColumn("jaccard_est",
-                    signature_agreement("_sig_c", "_sig_e", cfg.num_perm))
-        .filter(F.col("jaccard_est")
-                >= cfg.jaccard_threshold - cfg.verify_margin)
-        .select(id_col, eval_id_col, "jaccard_est")
-    )
+    corp_sig, eval_sig = _cut_signatures(
+        [corpus.select(F.col(id_col), F.col(text_col)),
+         eval_df.select(F.col(eval_id_col), F.col(text_col))],
+        cfg, text_col, "fuzzycontam")
+    return _cross_pairs(corp_sig, eval_sig, id_col, eval_id_col, cfg,
+                        broadcast_right=True)
 
 
 def fuzzy_decontaminate(

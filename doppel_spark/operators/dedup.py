@@ -4,7 +4,6 @@ One entry per dedup modality a 100 TB text pipeline needs, each built
 on the engine's primitives:
 
 * exact dedup (hash-groupBy keep-canonical) — built-in expressions
-* n-gram Jaccard near-dup — exact verification over LSH candidates
 * MinHash+LSH near-dup — :mod:`doppel_spark.operators.neardup`
 * SimHash near-dup — :mod:`doppel_spark.functions.simhash`
 * substring dedup — :mod:`doppel_spark.operators.suffix`
@@ -21,9 +20,7 @@ from pyspark.sql import functions as F
 
 from doppel_spark.config import NearDupConfig
 from doppel_spark.functions.digests import full_digest
-from doppel_spark.operators.components import clusters_with_singletons, connected_components
-from doppel_spark.operators.lsh import (candidate_pairs, signature_stage,
-                                        verify_pairs_exact)
+from doppel_spark.operators.lsh import _cross_pairs, _cut_signatures
 
 
 def _digest_or_sentinel(text_col: str, id_col: str):
@@ -124,34 +121,6 @@ def _colexpr(c) -> "F.Column":
     return F.col(c) if isinstance(c, str) else c
 
 
-def ngram_jaccard_dedup(
-    df: DataFrame, cfg: NearDupConfig | None = None,
-    id_col: str = "url", text_col: str = "text",
-) -> DataFrame:
-    """Near-dup clusters by EXACT n-gram Jaccard over LSH candidates.
-
-    Unlike the estimate-verified pipeline, candidate pairs are verified
-    with the true shingle Jaccard (pandas UDF over pair texts) before
-    clustering — the high-precision variant for final training cuts.
-    Returns (url, cluster_rep, cluster_id) covering all rows.
-    """
-    cfg = cfg or NearDupConfig()
-    from doppel_spark.operators.stage import StageMaterializer
-
-    mat = StageMaterializer.for_input(df.select(id_col, text_col),
-                                      prefix="ngramjac")
-    # cut below the MinHash stage: bucket membership alone evaluates its
-    # input twice, and candidate_pairs' internal memb cut still needs a
-    # UDF-free subtree above it to be cheap
-    sigs = mat.cut(
-        signature_stage(df, cfg, id_col=id_col, text_col=text_col), "sigs")
-    cand = candidate_pairs(sigs, cfg, id_col=id_col)
-    verified = verify_pairs_exact(cand, df, cfg, id_col=id_col, text_col=text_col) \
-        .filter(F.col("jaccard") >= cfg.jaccard_threshold)
-    comps = connected_components(verified.select("url_a", "url_b"))
-    return clusters_with_singletons(comps, df, id_col=id_col)
-
-
 def cross_snapshot_new(incoming: DataFrame, seen: DataFrame,
                        id_col: str = "url",
                        text_col: str = "text") -> DataFrame:
@@ -221,81 +190,20 @@ def cross_snapshot_neardup_pairs(
     (/root/reference/internal/scanner/finder.go:84-96), at near-dup
     rather than exact-hash granularity.
     """
-    import atexit
-
-    from doppel_spark.functions.minhash import signature_agreement
-    from doppel_spark.operators.lsh import band_keys
-    from doppel_spark.operators.stage import (SMALL_INPUT_BYTES,
-                                              StageMaterializer,
-                                              plan_size_bytes)
-
     cfg = cfg or NearDupConfig()
     new_id, seen_id = f"{id_col}_new", f"{id_col}_seen"
-
     inc_in = incoming.select(F.col(id_col).alias(new_id), F.col(text_col))
-    # the materializer cuts BOTH sides when the seen side is unsigned,
-    # so the persist-vs-scratch-table decision must consider the larger
-    # of the two inputs, not just the (typically smaller) snapshot
-    sizes = [plan_size_bytes(inc_in)]
-    if not seen_signed:
-        sizes.append(plan_size_bytes(seen))
-    mat = StageMaterializer.for_input(
-        inc_in, prefix="xsnapnd",
-        small_input=all(s is None or s < SMALL_INPUT_BYTES for s in sizes))
-    atexit.register(mat.cleanup)
-    inc_sig = mat.cut(
-        signature_stage(inc_in, cfg, id_col=new_id, text_col=text_col),
-        "inc_sig")
     if seen_signed:
+        (inc_sig,) = _cut_signatures([inc_in], cfg, text_col, "xsnapnd")
         seen_sig = seen.select(F.col(id_col).alias(seen_id),
                                "signature", "band_hashes")
     else:
-        seen_sig = mat.cut(
-            signature_stage(
-                seen.select(F.col(id_col).alias(seen_id), F.col(text_col)),
-                cfg, id_col=seen_id, text_col=text_col),
-            "seen_sig")
-
-    cands = (
-        band_keys(inc_sig, cfg, id_col=new_id)
-        .join(band_keys(seen_sig, cfg, id_col=seen_id), "band_hash")
-        .select(new_id, seen_id)
-        .distinct()
-    )
-    inc_need = inc_sig.join(
-        cands.select(new_id).distinct(), new_id, "left_semi")
-    seen_need = seen_sig.join(
-        cands.select(seen_id).distinct(), seen_id, "left_semi")
-    return (
-        cands
-        .join(inc_need.select(new_id, F.col("signature").alias("_sig_n")),
-              new_id)
-        .join(seen_need.select(seen_id, F.col("signature").alias("_sig_s")),
-              seen_id)
-        .withColumn("jaccard_est",
-                    signature_agreement("_sig_n", "_sig_s", cfg.num_perm))
-        .filter(F.col("jaccard_est")
-                >= cfg.jaccard_threshold - cfg.verify_margin)
-        .select(new_id, seen_id, "jaccard_est")
-    )
-
-
-def cross_snapshot_new_neardup(
-    incoming: DataFrame, seen: DataFrame, cfg: NearDupConfig | None = None,
-    id_col: str = "url", text_col: str = "text",
-    seen_signed: bool = False,
-) -> DataFrame:
-    """Incoming rows that do NOT near-duplicate prior-snapshot content —
-    the near-dup twin of :func:`cross_snapshot_new`. Flagged ids (a
-    trickle) anti-join back on the id; full incoming rows survive."""
-    flagged = (
-        cross_snapshot_neardup_pairs(
-            incoming, seen, cfg=cfg, id_col=id_col, text_col=text_col,
-            seen_signed=seen_signed)
-        .select(F.col(f"{id_col}_new").alias(id_col))
-        .distinct()
-    )
-    return incoming.join(flagged, id_col, "left_anti")
+        inc_sig, seen_sig = _cut_signatures(
+            [inc_in, seen.select(F.col(id_col).alias(seen_id),
+                                 F.col(text_col))],
+            cfg, text_col, "xsnapnd")
+    return _cross_pairs(inc_sig, seen_sig, new_id, seen_id, cfg,
+                        broadcast_right=False)
 
 
 def dedup_stats(assignments: DataFrame, id_col: str = "url") -> DataFrame:

@@ -421,7 +421,7 @@ def gopher_quality_filter(
 
     Scale shape: pure Catalyst per-row expressions over one text column
     — zero shuffle, composes with scan pushdown; at 100 TB this is a
-    map-only pass exactly like ``quality_score``. The top-n-gram mass
+    map-only pass exactly like ``quality_score_micros``. The top-n-gram mass
     rule (the one Gopher rule that needs an aggregation) is deliberately
     separate — compose with :func:`top_ngram_mass` when wanted.
     """

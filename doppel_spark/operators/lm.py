@@ -28,9 +28,9 @@ hash-match, not silently blessed.
 
 Scale notes (100 TB):
 
-* **Training** (:func:`unigram_lm`): one groupBy over tokens with
-  map-side partial aggregation — shuffle rows = distinct tokens per
-  partition, not occurrences. The 1-row total joins back via an
+* **Training** (inside :func:`doc_xent` when no ``lm`` is given): one
+  groupBy over tokens with map-side partial aggregation — shuffle rows
+  = distinct tokens per partition, not occurrences. The 1-row total joins back via an
   explicit ``broadcast``.
 * **Scoring** (:func:`doc_xent`): occurrences are collapsed to
   ``(doc, token, count)`` FIRST (map-side combine on the (doc, token)
@@ -89,22 +89,6 @@ def _lm_from_counts(per_tok: DataFrame) -> DataFrame:
                         / F.col("_t").cast("double")))
         .cast("long").alias("lpm"),
     )
-
-
-def unigram_lm(df: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
-    """Train the unigram model: ``(token, n, lpm)`` over the corpus.
-
-    ``lpm = floor(-1e6 · ln(n / total))`` — the token's negative log
-    probability in integer micro-nats (larger = rarer). ``total`` counts
-    token *occurrences*, so ``n/total`` is the maximum-likelihood
-    unigram probability; no smoothing term is needed for self-scoring
-    (every scored token is in the vocabulary by construction). Scoring
-    a FOREIGN corpus against this table drops out-of-vocabulary tokens
-    (inner join) — the CCNet convention of scoring only what the model
-    knows.
-    """
-    return _lm_from_counts(_per_doc_token_counts(df, id_col, text_col))
 
 
 def doc_xent(df: DataFrame, lm: DataFrame | None = None,

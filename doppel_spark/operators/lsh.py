@@ -22,9 +22,11 @@ Scale decisions, explicitly:
   delegated to the cluster step. Capped-bucket counts are surfaced in
   ``lsh_bucket_stats`` — never silently truncated.
 * **Verification never leaves the JVM** — agreement fraction of stored
-  signatures via ``zip_with``/``aggregate``; the optional exact-Jaccard
-  audit (pandas UDF over pair texts) is for tests/sampling, not the
-  hot path.
+  signatures (:func:`~doppel_spark.functions.minhash.signature_agreement`);
+  the optional exact-Jaccard audit (pandas UDF over pair texts) is for
+  audits and sampling, not the hot path. The same verify runs across
+  two tables (:func:`_cross_pairs`) for cross-snapshot near-dups and
+  fuzzy decontamination.
 """
 
 from __future__ import annotations
@@ -33,29 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from doppel_spark.config import NearDupConfig
-from doppel_spark.functions.minhash import (
-    exact_jaccard_udf,
-    minhash_sig_bands_udf,
-    signature_agreement,
-)
-
-
-def with_signature(df: DataFrame, cfg: NearDupConfig, text_col: str = "text") -> DataFrame:
-    """Add ``signature: binary`` (num_perm packed int32-LE) +
-    ``band_hashes: array<long>``.
-
-    Both come from ONE shingle pass (struct-returning pandas UDF); the
-    precomputed band hashes make downstream banding a plain codegen'd
-    ``explode`` — the Catalyst HOF alternative (transform+slice+xxhash64
-    per band) is interpreted and regresses ~2× under 32 executor
-    threads (see minhash.band_hashes docstring)."""
-    mh = minhash_sig_bands_udf(cfg.num_perm, cfg.shingle_k, cfg.seed, cfg.bands)
-    tmp = df.withColumn("_sb", mh(F.col(text_col)))
-    return (
-        tmp.withColumn("signature", F.col("_sb.signature"))
-        .withColumn("band_hashes", F.col("_sb.bands"))
-        .drop("_sb")
-    )
+from doppel_spark.functions.minhash import exact_jaccard_udf, signature_agreement
 
 
 def signature_stage(df: DataFrame, cfg: NearDupConfig, id_col: str = "url",
@@ -72,12 +52,12 @@ def signature_stage(df: DataFrame, cfg: NearDupConfig, id_col: str = "url",
     (minhash._as_string_array); the signature returns as ONE packed
     binary buffer (the kernel's numpy output, zero-copy) and the band
     column is assembled O(1) per batch
-    (minhash.sig_bands_arrow_columns). Values are byte-identical to
-    :func:`with_signature` (same kernel; asserted in tests).
+    (minhash.sig_bands_arrow_columns). It is the library's one
+    signature transport; every signature byte is checked against the
+    per-document spec in tests.
 
     Only (id, text) pass through the worker; callers needing more
-    columns join on ``id_col`` afterwards (or use
-    :func:`with_signature`, which appends in place).
+    columns join on ``id_col`` afterwards.
     """
     from pyspark.sql import types as T
 
@@ -234,13 +214,6 @@ def lsh_bucket_stats(exploded: DataFrame, key_cols: list[str],
     )
 
 
-def candidate_pairs(sig_df: DataFrame, cfg: NearDupConfig, id_col: str = "url") -> DataFrame:
-    """MinHash-LSH candidate pairs (url_a < url_b), deduped across bands."""
-    exploded = band_keys(sig_df, cfg, id_col=id_col)
-    return pairs_from_buckets(exploded, ["band_hash"],
-                              id_col=id_col, bucket_cap=cfg.bucket_cap)
-
-
 def verify_pairs(
     pairs: DataFrame, sig_df: DataFrame, cfg: NearDupConfig, id_col: str = "url",
 ) -> DataFrame:
@@ -270,6 +243,72 @@ def verify_pairs(
                     signature_agreement("sig_a", "sig_b", cfg.num_perm))
         .filter(F.col("jaccard_est") >= cfg.jaccard_threshold - cfg.verify_margin)
         .select("url_a", "url_b", "jaccard_est")
+    )
+
+
+def _cut_signatures(sides: list[DataFrame], cfg: NearDupConfig,
+                    text_col: str, prefix: str) -> list[DataFrame]:
+    """:func:`signature_stage` of each ``(id, text)`` frame, cut once
+    (each signed side feeds banding AND verification). One
+    materializer decides from every side's size; its caches live until
+    the process exits, since the returned frames read them."""
+    import atexit
+
+    from doppel_spark.operators.stage import StageMaterializer
+
+    mat = StageMaterializer.for_input(*sides, prefix=prefix)
+    atexit.register(mat.cleanup)
+    return [mat.cut(signature_stage(df, cfg, id_col=df.columns[0],
+                                    text_col=text_col), f"sig{i}")
+            for i, df in enumerate(sides)]
+
+
+def _cross_pairs(
+    left: DataFrame, right: DataFrame, left_id: str, right_id: str,
+    cfg: NearDupConfig, broadcast_right: bool,
+) -> DataFrame:
+    """:func:`verify_pairs` across two signed tables:
+    (``left_id``, ``right_id``, jaccard_est) for every pair that shares
+    a band hash and whose signature agreement is ≥ threshold −
+    verify_margin. Both sides are ``signature_stage`` rows.
+
+    Candidates come from an equi-join of 16-byte (id, band_hash) rows;
+    verification joins packed signatures onto that trickle, each
+    shuffled side semi-join pruned to its candidate ids first. Text
+    never moves.
+
+    ``broadcast_right`` is the join direction, fixed by each caller: a
+    benchmark-sized right side (an eval set) broadcasts its band keys
+    and signatures, so the left side never shuffles; an accumulated
+    corpus on the right is far too big for that, so both sides shuffle
+    and both are pruned.
+    """
+    right_keys = band_keys(right, cfg, id_col=right_id)
+    if broadcast_right:
+        right_keys = F.broadcast(right_keys)
+    cands = (
+        band_keys(left, cfg, id_col=left_id).join(right_keys, "band_hash")
+        .select(left_id, right_id)
+        .distinct()
+    )
+
+    def sigs(signed: DataFrame, id_col: str, alias: str, prune: bool):
+        if prune:
+            signed = signed.join(
+                cands.select(id_col).distinct(), id_col, "left_semi")
+        return signed.select(id_col, F.col("signature").alias(alias))
+
+    right_sig = sigs(right, right_id, "_sig_r", prune=not broadcast_right)
+    return (
+        cands
+        .join(sigs(left, left_id, "_sig_l", prune=True), left_id)
+        .join(F.broadcast(right_sig) if broadcast_right else right_sig,
+              right_id)
+        .withColumn("jaccard_est",
+                    signature_agreement("_sig_l", "_sig_r", cfg.num_perm))
+        .filter(F.col("jaccard_est")
+                >= cfg.jaccard_threshold - cfg.verify_margin)
+        .select(left_id, right_id, "jaccard_est")
     )
 
 

@@ -23,13 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: output schema of the decode/feature step
-MEDIA_FEATURES_SCHEMA = (
-    "asset_id string, kind string, byte_len long, "
-    "width int, height int, n_frames int, feature_digest string"
-)
-
-
 def _fake_decode(payload: bytes, kind: str) -> tuple[int, int, int, str]:
     """Deterministic fake media decode: dimensions derived from a
     content digest, so tests are reproducible and schema-realistic."""
@@ -38,61 +31,6 @@ def _fake_decode(payload: bytes, kind: str) -> tuple[int, int, int, str]:
     height = 64 + d[1] % 192
     n_frames = 1 if kind == "image" else 1 + d[2] % 64
     return width, height, n_frames, d.hex()[:16]
-
-
-def extract_media_features(
-    media: DataFrame, id_col: str = "asset_id", payload_col: str = "payload",
-    kind_col: str = "kind", decoder: str = "fake",
-) -> DataFrame:
-    """Decode/feature-extract pass over binary payloads via mapInPandas.
-
-    Arrow ships each partition as pandas batches; the UDF touches bytes
-    only inside the batch loop. Output is flat + typed so downstream
-    filters (size/aspect/frame-count) stay pushdown-able.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decoder == "real":
-                raise NotImplementedError(
-                    "real media decoding requires image/audio libraries not "
-                    "present in this environment; plug a decoder in here"
-                )
-            rows = []
-            for aid, kind, payload in zip(pdf[id_col], pdf[kind_col], pdf[payload_col]):
-                w, h, nf, digest = _fake_decode(payload, kind)
-                rows.append((aid, kind, len(payload or b""), w, h, nf, digest))
-            yield pd.DataFrame(rows, columns=[
-                "asset_id", "kind", "byte_len", "width", "height",
-                "n_frames", "feature_digest"])
-
-    cols = media.select(F.col(id_col), F.col(kind_col), F.col(payload_col))
-    return cols.mapInPandas(run, MEDIA_FEATURES_SCHEMA)
-
-
-def exact_media_dedup(media: DataFrame, id_col: str = "asset_id",
-                      payload_col: str = "payload") -> DataFrame:
-    """Byte-identical asset groups: sha2 over the binary column (JVM-side).
-
-    Same funnel as text exact-dup: group on ``octet_length`` first
-    (cheap), digest only colliding sizes.
-    """
-    from doppel_spark.operators.exact import multi_member_keys
-
-    sized = media.select(
-        F.col(id_col), F.col(payload_col),
-        F.octet_length(payload_col).alias("byte_len"),
-    )
-    hot = multi_member_keys(sized, "byte_len")
-    candidates = sized.join(hot, "byte_len", "left_semi")
-    return (
-        candidates.withColumn("digest", F.sha2(F.col(payload_col), 256))
-        .groupBy("digest")
-        .agg(F.count("*").alias("n_assets"),
-             F.first("byte_len").alias("byte_len"),
-             F.sort_array(F.collect_list(id_col)).alias("asset_ids"))
-        .filter(F.col("n_assets") > 1)
-    )
 
 
 #: output schema of the resize step — payload stays a binary column so
@@ -117,7 +55,7 @@ def resize_media(
     max_side // max(w, h)``, floored, min 1); smaller assets pass
     through byte-identical.
 
-    Same stub discipline as :func:`extract_media_features`: the fake
+    The decode is stubbed (module docstring): the fake
     decoder derives dimensions from the content digest and synthesizes
     a deterministic resized payload (the UTF-8 bytes of
     ``"{digest}:{w}x{h}"``), so the full Spark-side contract — binary

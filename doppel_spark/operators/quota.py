@@ -28,13 +28,11 @@ window sees it, while hosts already at ≤ f·k pages pass untouched.
 The prefilter is OFF by default because it is approximate at small
 ``k``: the binomial draw can leave fewer than ``k`` survivors with
 probability ≤ exp(−(f−1)²·k/(2f)) (Chernoff lower tail, δ=(f−1)/f,
-μ=f·k — :func:`prefilter_undershoot_bound` computes it) — negligible
-for ``f·k ≳ 200``, not for k=1. Exact mode is always exact.
+μ=f·k; check it for a given ``k`` before turning the prefilter on) —
+negligible for ``f·k ≳ 200``, not for k=1. Exact mode is always exact.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -89,13 +87,3 @@ def cap_per_host(df: DataFrame, k: int, url_col: str = "url",
         .select(id_col)
     )
     return df.join(winner_ids, id_col, "left_semi")
-
-
-def prefilter_undershoot_bound(k: int, factor: float) -> float:
-    """Chernoff upper bound on P(a ≥ f·k-page host keeps < k pages)
-    under the statistical prefilter — the number to check before
-    turning ``prefilter_factor`` on for a given ``k``."""
-    if k < 1 or factor <= 1:
-        raise ValueError("need k >= 1 and factor > 1")
-    delta = (factor - 1.0) / factor          # relative shortfall from mean f·k
-    return math.exp(-(delta * delta) * factor * k / 2.0)

@@ -25,22 +25,6 @@ def with_salt(df: DataFrame, id_col: str, shards: int, salt_col: str = "_salt") 
     return df.withColumn(salt_col, F.pmod(F.xxhash64(id_col), F.lit(shards)))
 
 
-def salted_count(df: DataFrame, key_cols: list[str], id_col: str,
-                 shards: int = 16) -> DataFrame:
-    """``groupBy(keys).count()`` with two-phase salting.
-
-    Phase 1 groups on (keys ∪ salt) — hot keys spread over ``shards``
-    reducers; phase 2 sums the ≤``shards`` partials per key. Output:
-    key cols + ``count``.
-    """
-    salted = with_salt(df, id_col, shards)
-    partial = salted.groupBy(*key_cols, "_salt").agg(F.count("*").alias("_partial"))
-    return (
-        partial.groupBy(*key_cols)
-        .agg(F.sum("_partial").cast("long").alias("count"))
-    )
-
-
 def salted_agg(df: DataFrame, key_cols: list[str], id_col: str,
                aggs: dict[str, tuple[str, str]], shards: int = 16) -> DataFrame:
     """General salted aggregation for algebraic functions.

@@ -121,8 +121,8 @@ class StageMaterializer:
     """Cuts pipeline stages with one consistent, size-aware strategy.
 
     Build one per pipeline run via :meth:`for_input` (pass the
-    pipeline's *input* DataFrame — typically parquet-rooted, so its
-    size estimate is trustworthy), then call :meth:`cut` at each
+    pipeline's *input* DataFrames — typically parquet-rooted, so their
+    size estimates are trustworthy), then call :meth:`cut` at each
     multi-consumer stage.
     """
 
@@ -161,22 +161,21 @@ class StageMaterializer:
         self._frames: dict[int, tuple[str, object]] = {}
 
     @classmethod
-    def for_input(cls, df: DataFrame, prefix: str = "stage",
-                  small_input: bool | None = None,
+    def for_input(cls, *dfs: DataFrame, prefix: str = "stage",
                   store: CheckpointStore | None = None) -> "StageMaterializer":
-        """Pick the strategy from the pipeline input's size estimate.
+        """Pick the strategy from the size estimates of every frame the
+        caller will cut (its pipeline inputs).
 
-        ``small_input=None`` → auto: inputs under ``SMALL_INPUT_BYTES``
-        (or of unknown size — direct operator calls on ad-hoc frames,
-        which in practice are tests and small corpora) use persist;
-        larger inputs use scratch tables. Pipelines at real scale should
-        pass ``small_input=False`` (or read from parquet/Iceberg, whose
-        estimates are accurate).
+        Persist when every estimate is under ``SMALL_INPUT_BYTES`` or
+        unknown (direct operator calls on ad-hoc frames, which in
+        practice are tests and small corpora); scratch tables
+        otherwise. Pipelines at real scale read from parquet/Iceberg,
+        whose estimates are accurate; a caller that needs one policy
+        whatever the size builds ``StageMaterializer(spark, mode=...)``.
         """
-        if small_input is None:
-            size = plan_size_bytes(df)
-            small_input = size is None or size < SMALL_INPUT_BYTES
-        return cls(df.sparkSession, mode="persist" if small_input else "table",
+        small = all(size is None or size < SMALL_INPUT_BYTES
+                    for size in map(plan_size_bytes, dfs))
+        return cls(dfs[0].sparkSession, mode="persist" if small else "table",
                    prefix=prefix, store=store)
 
     @contextlib.contextmanager

@@ -13,8 +13,9 @@ Two stages, both distribution-friendly:
 2. **Verification** — exact longest-common-substring length per
    candidate pair via a generalized suffix array over
    ``text_a ⊕ sep ⊕ text_b``: prefix-doubling construction
-   (O(n log² n), fully vectorized numpy lexsort), Kasai LCP, max LCP
-   between adjacent suffixes originating in different documents.
+   (O(n log² n), fully vectorized numpy lexsort), LCP read off the
+   doubling levels, max LCP between adjacent suffixes originating in
+   different documents.
    Runs as a vectorized pandas UDF over pair rows.
 """
 
@@ -65,11 +66,6 @@ def _suffix_array_levels(
         k *= 2
 
 
-def suffix_array(s: np.ndarray) -> np.ndarray:
-    """Suffix array by prefix doubling (numpy lexsort), O(n log² n)."""
-    return _suffix_array_levels(s)[0]
-
-
 def _lcp_pairs(i_arr: np.ndarray, j_arr: np.ndarray,
                levels: list[tuple[int, np.ndarray]], n: int) -> np.ndarray:
     """LCP of suffix pairs (i, j), vectorized over the pairs.
@@ -96,27 +92,6 @@ def _lcp_pairs(i_arr: np.ndarray, j_arr: np.ndarray,
         i[eq] += span
         j[eq] += span
     return h
-
-
-def lcp_array(s: np.ndarray) -> np.ndarray:
-    """lcp[i] = LCP(sa[i], sa[i-1]) for the suffix array of ``s``;
-    lcp[0] = 0.
-
-    Computes the suffix array and the doubling levels internally from
-    ``s`` — the one prefix-doubling pass yields both, so accepting a
-    caller-supplied ``sa`` would only duplicate the construction cost
-    and open an inconsistent-(s, sa) hazard (the LCP query reads ranks
-    derived from ``s``, so a mismatched ``sa`` would silently yield
-    wrong LCPs). Vectorized via the doubling levels: same asymptotics
-    as Kasai, O(n log n), but numpy ops over all adjacent pairs at once
-    instead of a per-character Python loop."""
-    n = len(s)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    sa, levels = _suffix_array_levels(s)
-    lcp = np.zeros(n, dtype=np.int64)
-    lcp[1:] = _lcp_pairs(sa[1:], sa[:-1], levels, n)
-    return lcp
 
 
 def longest_common_substring_len(a: str, b: str) -> int:

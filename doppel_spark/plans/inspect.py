@@ -16,10 +16,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def plan_has(df: DataFrame, *fragments: str) -> bool:
     """True if every fragment appears in the physical plan."""
     plan = physical_plan(df)
@@ -53,15 +49,3 @@ def assert_no_exchange(df: DataFrame) -> None:
     plan = physical_plan(df)
     if "Exchange" in plan:
         raise AssertionError("plan moves data (Exchange present):\n" + plan)
-
-
-def scan_read_schema(df: DataFrame) -> list[str]:
-    """ReadSchema column lists of every parquet scan in the plan —
-    verifies column pruning (e.g. `html` absent when unused)."""
-    import re
-
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    out = []
-    for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
-        out.append([c.split(":")[0] for c in m.group(1).split(",") if c])
-    return out

@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from doppel_spark.functions.digests import full_digest
 
 
 def windowed_event_counts(
@@ -44,31 +43,4 @@ def windowed_event_counts(
         .groupBy(F.window(F.col(ts_col), window).alias("window"),
                  F.col(key_col))
         .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-def windowed_ingest_stats(
-    stream: DataFrame,
-    ts_col: str = "warc_ts",
-    text_col: str = "text",
-    window: str = "10 minutes",
-    slide: str | None = None,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """streaming pages → per-window ingest statistics.
-
-    Output: window struct + n_docs, n_langs (approx), n_distinct_digests
-    (approx — HLL via approx_count_distinct; exact distinct is not
-    streamable with bounded state).
-    """
-    win = F.window(F.col(ts_col), window, slide) if slide else F.window(F.col(ts_col), window)
-    return (
-        stream.withColumn("digest", full_digest(text_col))
-        .withWatermark(ts_col, watermark)
-        .groupBy(win.alias("window"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.approx_count_distinct("lang").alias("n_langs"),
-            F.approx_count_distinct("digest").alias("n_distinct_digests"),
-        )
     )

@@ -19,7 +19,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from doppel_spark.functions.splits import (  # noqa: E402
     BUCKETS,
     assign_split,
-    hash_sample,
     stratified_sample,
     uniform_bucket,
 )
@@ -135,17 +134,6 @@ def test_assign_split_validates(spark):
         assign_split("doc_id", {})
     with pytest.raises(ValueError):
         assign_split("doc_id", {"a": 1.0, "b": -0.1})
-
-
-def test_hash_sample_fraction_and_determinism(spark):
-    df = spark.range(0, 5000).withColumnRenamed("id", "doc_id")
-    s = hash_sample(df, 0.2, "doc_id", seed="smp")
-    n = s.count()
-    assert 0.15 * 5000 < n < 0.25 * 5000
-    assert s.count() == n  # same plan, same rows
-    assert hash_sample(df.repartition(11), 0.2, "doc_id", "smp").count() == n
-    with pytest.raises(ValueError):
-        hash_sample(df, 1.5, "doc_id")
 
 
 def test_stratified_sample_per_stratum(spark):

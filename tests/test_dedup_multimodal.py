@@ -5,18 +5,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from doppel_spark.config import NearDupConfig
 from doppel_spark.corpus import synth_pages
 from doppel_spark.operators.dedup import (
     dedup_assignments,
     dedup_stats,
     exact_dedup,
-    ngram_jaccard_dedup,
 )
-from doppel_spark.operators.multimodal import (
-    exact_media_dedup,
-    extract_media_features,
-)
+from doppel_spark.operators.multimodal import resize_media
 
 
 def test_exact_dedup_keep_min_id(spark, docs):
@@ -56,58 +51,11 @@ def test_dedup_assignments_and_stats(spark, docs):
         == (6, 3, 3, 2)
 
 
-def test_ngram_jaccard_dedup_exact_verification(spark):
-    pages = synth_pages(spark, 200).filter(
-        "url like '%/near/%' or url like '%/uniq/%'").cache()
-    clusters = ngram_jaccard_dedup(pages, NearDupConfig(jaccard_threshold=0.85))
-    pdf = clusters.toPandas()
-    rep = dict(zip(pdf["url"], pdf["cluster_rep"]))
-    # 0.95/0.9-target clusters collapse; 0.5-target clusters stay singletons
-    from doppel_spark.corpus import CorpusLayout, NEAR_TARGETS, NEAR_CLUSTER
-    lo = CorpusLayout.plan(200)
-    for c in range(lo.n_near_clusters):
-        urls = [u for u in rep if f"/near/{c:08d}/" in u]
-        assert len(urls) == NEAR_CLUSTER
-        n_reps = len({rep[u] for u in urls})
-        if NEAR_TARGETS[c % len(NEAR_TARGETS)] >= 0.9:
-            assert n_reps == 1, f"cluster {c} should collapse"
-        elif NEAR_TARGETS[c % len(NEAR_TARGETS)] == 0.5:
-            assert n_reps == NEAR_CLUSTER, f"cluster {c} should stay apart"
-    # every doc got an assignment (singletons included)
-    assert len(pdf) == pages.count()
-    pages.unpersist()
-
-
-def test_media_features_schema_and_determinism(spark):
-    media = spark.createDataFrame(
-        [("a1", "image", b"\x89PNG fake bytes"),
-         ("a2", "video", b"\x00\x00ftyp fake"),
-         ("a3", "image", b"")],
-        "asset_id string, kind string, payload binary")
-    out1 = extract_media_features(media).orderBy("asset_id").collect()
-    out2 = extract_media_features(media).orderBy("asset_id").collect()
-    assert [tuple(r) for r in out1] == [tuple(r) for r in out2]
-    r = out1[0]
-    assert r["byte_len"] == 15 and 64 <= r["width"] <= 255 and r["n_frames"] == 1
-    video = out1[1]
-    assert video["n_frames"] >= 1
-
-
 def test_media_real_decoder_is_stubbed(spark):
     media = spark.createDataFrame([("a1", "image", b"x")],
                                   "asset_id string, kind string, payload binary")
-    with pytest.raises(Exception, match="NotImplementedError|real media decoding"):
-        extract_media_features(media, decoder="real").collect()
-
-
-def test_exact_media_dedup(spark):
-    media = spark.createDataFrame(
-        [("a1", b"same-bytes"), ("a2", b"same-bytes"), ("a3", b"other"),
-         ("a4", b"same-size!")],  # same length as a1/a2, different bytes
-        "asset_id string, payload binary")
-    groups = exact_media_dedup(media).collect()
-    assert len(groups) == 1
-    assert groups[0]["asset_ids"] == ["a1", "a2"]
+    with pytest.raises(Exception, match="NotImplementedError|real media resize"):
+        resize_media(media, max_side=1, decoder="real").collect()
 
 
 def test_streaming_incremental_dedup(spark, tmp_path):

@@ -48,26 +48,6 @@ def test_ivf_ann_overlaps_exact(spark):
     assert len(e & a) / len(e) >= 0.3  # cell-probed search, sane overlap
 
 
-def test_windowed_ingest_stats_stream(spark, tmp_path):
-    from doppel_spark.streaming.windows import windowed_ingest_stats
-
-    pages = synth_pages(spark, 100)  # warc_ts = epoch + i seconds
-    src = str(tmp_path / "seg")
-    pages.write.parquet(src)
-    stream = spark.readStream.schema(pages.schema).parquet(src)
-    agg = windowed_ingest_stats(stream, window="1 minute", watermark="5 minutes")
-    q = (agg.writeStream.format("memory").queryName("win_stats")
-         .outputMode("complete").start())
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("select * from win_stats order by window").collect()
-        assert sum(r["n_docs"] for r in rows) == 100
-        assert len(rows) == 2  # 100 seconds spans two 1-minute windows
-        assert all(r["n_distinct_digests"] > 0 for r in rows)
-    finally:
-        q.stop()
-
-
 def test_windowed_event_counts_append_watermark(spark, tmp_path):
     """The guaranteed side of the watermark contract, cross-batch:
     a late row inside the watermark updates its already-seen window;

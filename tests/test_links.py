@@ -4,8 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from doppel_spark.functions.links import (extract_hrefs, host_edges,
-                                          host_rank_from_pages)
+from doppel_spark.functions.links import extract_hrefs, host_edges
+from doppel_spark.operators.graph import host_rank
 
 
 def _pages(spark):
@@ -45,8 +45,8 @@ def test_host_edges_canonicalize_weight_and_drop(spark):
 
 def test_host_rank_from_pages_composes(spark):
     ranks = {r.host: r.rank_micros
-             for r in host_rank_from_pages(_pages(spark),
-                                           iterations=3).collect()}
+             for r in host_rank(host_edges(_pages(spark)), weight="w",
+                                iterations=3).collect()}
     # nodes = all edge endpoints; b.com is the only multiply-linked sink
     assert set(ranks) == {"a.com", "b.com", "c.com"}
     assert max(ranks, key=ranks.get) == "b.com"

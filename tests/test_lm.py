@@ -13,11 +13,12 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from doppel_spark.operators.lm import (  # noqa: E402
+    _lm_from_counts,
+    _per_doc_token_counts,
     bucket_label,
     ccnet_buckets,
     doc_xent,
     tercile_thresholds,
-    unigram_lm,
 )
 from doppel_spark.plans.inspect import assert_no_row_python  # noqa: E402
 
@@ -32,8 +33,13 @@ def _lpm(n, total):
     return math.floor(-1_000_000 * math.log(n / total))
 
 
+def _train(df):
+    """The model ``doc_xent`` trains on its own input when given none."""
+    return _lm_from_counts(_per_doc_token_counts(df, "doc_id", "text"))
+
+
 def test_unigram_lm_hand_values(spark):
-    lm = {r["token"]: r for r in unigram_lm(_corpus(spark)).collect()}
+    lm = {r["token"]: r for r in _train(_corpus(spark)).collect()}
     assert {t: r["n"] for t, r in lm.items()} == {"a": 4, "b": 2, "c": 1, "d": 1}
     for t, n in [("a", 4), ("b", 2), ("c", 1), ("d", 1)]:
         assert lm[t]["lpm"] == _lpm(n, 8)
@@ -53,7 +59,7 @@ def test_doc_xent_hand_values(spark):
 
 
 def test_foreign_corpus_drops_oov(spark):
-    lm = unigram_lm(_corpus(spark))
+    lm = _train(_corpus(spark))
     foreign = spark.createDataFrame(
         [(10, "a zz b")], "doc_id long, text string")
     out = doc_xent(foreign, lm=lm).collect()[0]

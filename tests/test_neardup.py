@@ -12,20 +12,16 @@ from doppel_spark.config import NearDupConfig
 from doppel_spark.corpus import CorpusLayout, planted_pairs, synth_pages
 from doppel_spark.functions.minhash import (
     exact_jaccard_udf,
-    minhash_signature_udf,
     shingle_set,
     signature_agreement,
-    unpack_signature,
 )
 from doppel_spark.functions.simhash import simhash_near_pairs, simhash_udf
 from doppel_spark.operators.components import connected_components
 from doppel_spark.operators.lsh import (
     band_keys,
-    candidate_pairs,
     lsh_bucket_stats,
     pairs_from_buckets,
-    verify_pairs,
-    with_signature,
+    signature_stage,
 )
 from doppel_spark.operators.neardup import near_dup_pipeline
 
@@ -42,12 +38,12 @@ def test_shingles():
 def test_minhash_identical_texts_identical_signatures(spark):
     df = spark.createDataFrame([("a", "x y z w v u t s"), ("b", "x y z w v u t s")],
                                "url string, text string")
-    sigs = with_signature(df, CFG).select("url", "signature").collect()
+    sigs = signature_stage(df, CFG).select("url", "signature").collect()
     s = {r["url"]: r["signature"] for r in sigs}
     assert s["a"] == s["b"]
     # binary-packed: num_perm little-endian int32 cells
     assert len(s["a"]) == 4 * CFG.num_perm
-    assert unpack_signature(s["a"]).shape == (CFG.num_perm,)
+    assert np.frombuffer(s["a"], "<i4").shape == (CFG.num_perm,)
 
 
 def test_minhash_estimates_jaccard(spark):
@@ -56,9 +52,9 @@ def test_minhash_estimates_jaccard(spark):
     mod = base[:160] + [f"z{i}" for i in range(40)]  # tail replaced
     df = spark.createDataFrame(
         [("a", " ".join(base)), ("b", " ".join(mod))], "url string, text string")
-    sigs = with_signature(df, CFG)
-    a = unpack_signature(sigs.filter("url='a'").select("signature").collect()[0][0])
-    b = unpack_signature(sigs.filter("url='b'").select("signature").collect()[0][0])
+    sigs = signature_stage(df, CFG)
+    a = np.frombuffer(sigs.filter("url='a'").select("signature").collect()[0][0], "<i4")
+    b = np.frombuffer(sigs.filter("url='b'").select("signature").collect()[0][0], "<i4")
     est = sum(x == y for x, y in zip(a, b)) / CFG.num_perm
     jac = exact_jaccard_udf(5)
     true_j = (
@@ -159,7 +155,7 @@ def test_hot_bucket_cap_engages_and_is_reported(spark):
     pages = synth_pages(spark, n).filter(F.col("url").contains("/hot/")).cache()
     n_hot = pages.count()
     assert n_hot > 16
-    sigs = with_signature(pages, cfg).select("url", "signature", "band_hashes")
+    sigs = signature_stage(pages, cfg)
     stats = lsh_bucket_stats(band_keys(sigs, cfg), ["band_hash"],
                              bucket_cap=cfg.bucket_cap).collect()[0]
     assert stats["capped_buckets"] > 0
@@ -209,12 +205,15 @@ def test_simhash_deterministic(spark):
 
 
 def test_minhash_num_perm_not_chunk_multiple(spark):
-    # num_perm=80 is not a multiple of the 32-perm L2 chunk; the UDF
+    # num_perm=80 is not a multiple of the 32-perm L2 chunk; the kernel
     # must slice the final short chunk instead of crashing
-    df = spark.createDataFrame([("a b c d e f g",), ("x y z",)], "text string")
-    mh = minhash_signature_udf(num_perm=80, k=3)
-    sigs = [r[0] for r in df.select(mh("text")).collect()]
-    assert all(unpack_signature(s).size == 80 for s in sigs)
+    df = spark.createDataFrame([("a", "a b c d e f g"), ("b", "x y z")],
+                               "url string, text string")
+    cfg = NearDupConfig(num_perm=80, bands=16, shingle_k=3)
+    rows = signature_stage(df, cfg).collect()
+    assert len(rows) == 2
+    assert all(np.frombuffer(r["signature"], "<i4").size == 80 for r in rows)
+    assert all(len(r["band_hashes"]) == 16 for r in rows)
 
 
 def test_components_nonconvergence_raises(spark):

@@ -26,8 +26,8 @@ from doppel_spark.functions.minhash import (  # noqa: E402
     _BufPool,
     _batch_sig_matrix,
     perm_constants,
-    shingle_hashes,
 )
+from minhash_spec import shingle_hashes  # noqa: E402
 
 K = 5  # NearDupConfig.shingle_k default — what the planted queries run
 

@@ -4,10 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from doppel_spark.operators.quota import (
-    cap_per_host,
-    prefilter_undershoot_bound,
-)
+from doppel_spark.operators.quota import cap_per_host
 
 
 @pytest.fixture()
@@ -52,15 +49,6 @@ def test_prefilter_agrees_when_loose(spark, pages):
     pre = sorted(r["doc_id"] for r in
                  cap_per_host(pages, k=3, prefilter_factor=50.0).collect())
     assert exact == pre
-
-
-def test_validation():
-    with pytest.raises(ValueError):
-        prefilter_undershoot_bound(0, 4.0)
-    with pytest.raises(ValueError):
-        prefilter_undershoot_bound(5, 1.0)
-    assert prefilter_undershoot_bound(64, 4.0) < 1e-6
-    assert prefilter_undershoot_bound(1, 4.0) > 0.1  # why default is exact
 
 
 def test_cap_k_validation(spark, pages):

@@ -2,15 +2,24 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from doppel_spark.corpus import synth_pages
-from doppel_spark.operators.salting import salted_agg, salted_count, with_salt
+from doppel_spark.operators.salting import salted_agg, with_salt
 from doppel_spark.plans import assert_no_row_python, plan_has, physical_plan
-from doppel_spark.plans.inspect import scan_read_schema
 from doppel_spark.sources import read_pages
 from doppel_spark.sources.pages import PagesSchemaError, validate_pages_schema
+
+
+def scan_read_schema(df) -> list[list[str]]:
+    """ReadSchema column lists of every parquet scan in the plan —
+    verifies column pruning (e.g. `html` absent when unused)."""
+    return [[c.split(":")[0] for c in m.group(1).split(",") if c]
+            for m in re.finditer(r"ReadSchema: struct<([^>]*)>",
+                                 physical_plan(df))]
 
 
 def test_salted_count_matches_plain(spark):
@@ -19,7 +28,8 @@ def test_salted_count_matches_plain(spark):
         "key string, id string")
     plain = {(r["key"], r["count"]) for r in df.groupBy("key").count().collect()}
     salted = {(r["key"], r["count"])
-              for r in salted_count(df, ["key"], "id", shards=8).collect()}
+              for r in salted_agg(df, ["key"], "id", {"count": ("id", "count")},
+                                  shards=8).collect()}
     assert salted == plain
 
 

@@ -38,9 +38,18 @@ def test_for_input_auto_picks_persist_for_small(spark, tmp_path):
 
 
 def test_for_input_explicit_override(spark):
-    df = spark.range(10).toDF("id")
-    assert StageMaterializer.for_input(df, small_input=False).mode == "table"
-    assert StageMaterializer.for_input(df, small_input=True).mode == "persist"
+    # a caller that needs one policy whatever the size builds it directly
+    assert StageMaterializer(spark, mode="table").mode == "table"
+    assert StageMaterializer(spark, mode="persist").mode == "persist"
+
+
+def test_for_input_decides_on_every_frame(spark):
+    small = spark.range(10).toDF("id")
+    big = spark.range(SMALL_INPUT_BYTES // 8 + 1).toDF("id")  # never run
+    assert plan_size_bytes(big) >= SMALL_INPUT_BYTES
+    assert StageMaterializer.for_input(small).mode == "persist"
+    assert StageMaterializer.for_input(small, big).mode == "table"
+    assert StageMaterializer.for_input(big, small).mode == "table"
 
 
 def test_cut_persist_roundtrip_and_cleanup(spark):

@@ -7,19 +7,19 @@ import numpy as np
 from doppel_spark.corpus import synth_pages
 from doppel_spark.functions.fingerprint import _kgram_hashes, winnow
 from doppel_spark.operators.suffix import (
-    lcp_array,
+    _lcp_pairs,
+    _suffix_array_levels,
     longest_common_substring_len,
     substring_dup_pairs,
-    suffix_array,
 )
 
 
 def test_suffix_array_banana():
     s = np.frombuffer(b"banana", dtype=np.uint8).astype(np.int64)
-    sa = suffix_array(s).tolist()
-    assert sa == [5, 3, 1, 0, 4, 2]  # a, ana, anana, banana, na, nana
-    lcp = lcp_array(s).tolist()
-    assert lcp == [0, 1, 3, 0, 0, 2]
+    sa, levels = _suffix_array_levels(s)
+    assert sa.tolist() == [5, 3, 1, 0, 4, 2]  # a, ana, anana, banana, na, nana
+    # LCP of each suffix with its predecessor in suffix-array order
+    assert _lcp_pairs(sa[1:], sa[:-1], levels, len(s)).tolist() == [1, 3, 0, 0, 2]
 
 
 def test_lcs_basic():

@@ -10,7 +10,7 @@ from doppel_spark.functions.text import (
     distinct_token_ratio,
     lang_id,
     punct_ratio,
-    quality_score,
+    quality_score_micros,
     stopword_ratio,
     token_count,
     word_token_count,
@@ -58,9 +58,9 @@ def test_quality_score_ordering(spark):
     good = "the data and the model is that good " * 10
     spam = "buy buy buy buy buy"
     df = spark.createDataFrame([("g", good), ("s", spam)], "id string, text string")
-    scores = {r["id"]: r["quality_score"]
-              for r in df.select("id", quality_score("text")).collect()}
-    assert 0 <= scores["s"] < scores["g"] <= 1
+    scores = {r["id"]: r["quality_micros"]
+              for r in df.select("id", quality_score_micros("text")).collect()}
+    assert 0 <= scores["s"] < scores["g"] <= 1_000_000
 
 
 def test_stopword_ratio(spark):

@@ -188,25 +188,13 @@ def test_cross_snapshot_neardup_seen_signed(spark):
     assert got == [("n0", "s0", 1.0), ("n1", "s1", 1.0), ("n2", "s2", 1.0)]
 
 
-def test_cross_snapshot_new_neardup_keeps_unseen(spark):
-    from doppel_spark.operators.dedup import cross_snapshot_new_neardup
-
-    incoming, seen = _xsnap_fixtures(spark)
-    out = cross_snapshot_new_neardup(incoming, seen, id_col="doc_id")
-    assert sorted(r["doc_id"] for r in out.collect()) == ["n3", "n4", "n5"]
-    assert set(out.columns) == {"doc_id", "text"}       # full rows survive
-
-
 def test_cross_snapshot_neardup_empty_seen(spark):
-    from doppel_spark.operators.dedup import (cross_snapshot_neardup_pairs,
-                                              cross_snapshot_new_neardup)
+    from doppel_spark.operators.dedup import cross_snapshot_neardup_pairs
 
     incoming, _ = _xsnap_fixtures(spark)
     empty = spark.createDataFrame([], "doc_id string, text string")
     assert cross_snapshot_neardup_pairs(
         incoming, empty, id_col="doc_id").count() == 0
-    assert cross_snapshot_new_neardup(
-        incoming, empty, id_col="doc_id").count() == incoming.count()
 
 
 def test_url_signals_shapes(spark):

@@ -29,9 +29,9 @@ from doppel_spark.functions.minhash import (  # noqa: E402
     ascii_ws_tokens,
     band_hashes,
     perm_constants,
-    shingle_hashes,
 )
 from doppel_spark.operators.neardup import near_dup_pipeline  # noqa: E402
+from minhash_spec import shingle_hashes  # noqa: E402
 from test_entry_contract import SF_DIR  # noqa: E402  (the contract's corpus)
 
 
