@@ -33,7 +33,6 @@ from doppel_spark.functions.redact import (  # noqa: E402
     ipv4_count,
     redact_pii,
 )
-from doppel_spark.functions.simhash import simhash_udf  # noqa: E402
 from doppel_spark.functions.splits import (  # noqa: E402
     assign_split,
     split_thresholds,
@@ -1216,10 +1215,39 @@ def _q_minhash_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster_rep", "n_docs", F.array_join("urls", ",").alias("members"))
 
 
+def _simhashes(df: DataFrame, id_col: str) -> DataFrame:
+    """(id, simhash): the signature stage's SimHash kernel alone, in one
+    ``mapInArrow`` pass — a SimHash-only query runs no MinHash."""
+    from doppel_spark.functions.simhash import simhash_arrow_column
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), simhash_arrow_column(b.column(1))],
+                names=[id_col, "simhash"])
+
+    in_df = df.select(id_col, "text")
+    id_type = in_df.schema[id_col].dataType.simpleString()
+    return in_df.mapInArrow(gen, f"`{id_col}` {id_type}, simhash long")
+
+
+def _simhash_pairs(df: DataFrame, id_col: str) -> DataFrame:
+    """Pairs within Hamming 3 over ``df``'s texts; the fingerprints are
+    cut (filled lazily by the membership cut's scan): one kernel run."""
+    from doppel_spark.functions.simhash import simhash_near_pairs
+    from doppel_spark.operators.stage import StageMaterializer
+
+    fps = _simhashes(df, id_col)
+    mat = StageMaterializer.for_input(fps, prefix="simhash")
+    return simhash_near_pairs(mat.cut(fps, "fps", force=False), mat,
+                              id_col=id_col, hamming_t=3)
+
+
 def _q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship_package(spark)
-    return _docs(spark, sf_dir).select(
-        "doc_id", simhash_udf()(F.col("text")).alias("simhash"))
+    return _simhashes(_docs(spark, sf_dir), "doc_id")
 
 
 def _q_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1527,8 +1555,6 @@ def _q_simhash_pairs_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash key — this compare wires the absence in as an assertion).
     """
     ship_package(spark)
-    from doppel_spark.functions.simhash import simhash_near_pairs
-
     sel = _plant_stems(spark, sf_dir, SHP_PAIRS)
     rot = _PLANT_BASE_SQL.replace(
         "concat(stem, 'w', j)",
@@ -1537,9 +1563,7 @@ def _q_simhash_pairs_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.expr(_PLANT_BASE_SQL).alias("text"))
     b = sel.select(F.format_string("sh:%02d:b", "rk").alias("url"),
                    F.expr(rot).alias("text"))
-    fps = a.union(b).select(
-        "url", simhash_udf()(F.col("text")).alias("simhash"))
-    return simhash_near_pairs(fps, id_col="url", hamming_t=3).select(
+    return _simhash_pairs(a.union(b), "url").select(
         "url_a", "url_b", F.col("hamming").cast("long").alias("hamming"))
 
 
@@ -1734,12 +1758,10 @@ def _q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pigeonhole guarantee under test: a planted 1-token-edited copy of
-    # each first-20 doc must pair with its original (Hamming ≤ t after a
-    # single token flip); hash-function-defined → rows-only
+    # pigeonhole guarantee under test: every pair within Hamming t among
+    # the docs and 1-token-edited copies of the first 20 (15 pair with
+    # their original at sf0.01); rows-only, value-gated in tests
     ship_package(spark)
-    from doppel_spark.functions.simhash import simhash_near_pairs
-
     # raw read + ONE spread over the union: spreading each branch
     # separately would re-pay the repartition per union arm (r6)
     docs = _docs_raw(spark, sf_dir).select("doc_id", "text")
@@ -1749,8 +1771,7 @@ def _q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     both = _spread(docs.union(edited)) \
         .withColumn("url", F.col("doc_id").cast("string"))
-    fps = both.select("url", simhash_udf()(F.col("text")).alias("simhash"))
-    return simhash_near_pairs(fps, id_col="url", hamming_t=3)
+    return _simhash_pairs(both, "url")
 
 
 def _q_stream_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

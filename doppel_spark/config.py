@@ -222,7 +222,6 @@ class NearDupConfig:
     #: makes recall ≥ 0.99 achievable at the threshold boundary.
     verify_margin: float = 0.1
     bucket_cap: int = 256       # max docs per LSH bucket before pair explosion
-    simhash_bits: int = 64
     simhash_hamming: int = 3    # max Hamming distance for SimHash near-dups
     min_substring: int = 256    # suffix-array common-substring report floor
 

@@ -155,25 +155,22 @@ class _BufPool:
 
 
 def _as_string_array(texts):
-    """pandas Series OR pyarrow Array → a null-free ``pa.StringArray``.
+    """pyarrow (Chunked)Array → a null-free ``pa.StringArray``.
 
-    The pyarrow branch is the ``mapInArrow`` fast path: Spark's Arrow
-    batch is used AS IS — no per-row Python string materialization (the
-    pandas conversion allocates a PyUnicode per document, which round-4
-    profiling showed dominates the signature stage's worker time).
+    The ``mapInArrow`` fast path: Spark's Arrow batch is used AS IS — no
+    per-row Python string materialization (a pandas conversion allocates
+    a PyUnicode per document, which round-4 profiling showed dominates
+    the signature stage's worker time).
     """
     import pyarrow as pa
 
     if isinstance(texts, pa.ChunkedArray):
         texts = texts.combine_chunks()
-    if isinstance(texts, pa.Array):
-        arr = texts
-        if pa.types.is_large_string(arr.type):
-            arr = arr.cast(pa.string())
-        if arr.null_count:
-            arr = pa.compute.fill_null(arr, "")
-        return arr
-    return pa.array(texts.fillna(""), type=pa.string())
+    if pa.types.is_large_string(texts.type):
+        texts = texts.cast(pa.string())
+    if texts.null_count:
+        texts = pa.compute.fill_null(texts, "")
+    return texts
 
 
 def _batch_sig_matrix(texts, pool: _BufPool, consts: np.ndarray,
@@ -406,7 +403,7 @@ def _packed_sig_arrow(sigs: np.ndarray, num_perm: int):
 
 def sig_bands_arrow_columns(texts, pool: _BufPool, consts: np.ndarray,
                             num_perm: int, k: int, bands: int):
-    """texts (pa.Array or pd.Series) → (signature ``binary`` packed
+    """texts (pa.Array) → (signature ``binary`` packed
     int32-LE, band_hashes ``list<int64>``) pyarrow columns.
 
     The return path is O(1) Python objects per BATCH: the signature

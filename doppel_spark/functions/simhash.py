@@ -17,9 +17,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from doppel_spark.functions.minhash import ascii_ws_tokens
 
@@ -30,8 +30,9 @@ SIMHASH_BITS = 64
 _BIT_WEIGHTS = np.uint64(1) << np.arange(SIMHASH_BITS, dtype=np.uint64)
 
 
-def simhash_udf(ngram: int = 1):
-    """pandas UDF: text → int64 SimHash over token (or token-n-gram) features.
+def simhash_arrow_column(texts):
+    """Arrow string column → int64 SimHash column over token features —
+    the SimHash half of ``lsh.signature_stage``'s ``mapInArrow`` batch.
 
     Per doc: tokenize (ASCII-whitespace split, the engine-wide class),
     dedupe with counts
@@ -50,34 +51,24 @@ def simhash_udf(ngram: int = 1):
     compression on repetitive text). The weighted ±1 sum uses the
     identity ``v = 2·(counts·bits) − n_tokens``.
     """
-
-    @F.pandas_udf(T.LongType())
-    def simhash(texts: pd.Series) -> pd.Series:
-        n = len(texts)
-        ones = np.zeros((n, SIMHASH_BITS), dtype=np.int64)
-        totals = np.zeros(n, dtype=np.int64)
-        for i, t in enumerate(texts):
-            # engine-wide ASCII-whitespace split (same class as the
-            # MinHash kernel/spec — Unicode whitespace is a token byte)
-            toks = ascii_ws_tokens(t or "")
-            if ngram > 1 and len(toks) >= ngram:
-                toks = [" ".join(toks[j : j + ngram])
-                        for j in range(len(toks) - ngram + 1)]
-            if not toks:
-                continue
-            feats, counts = np.unique(np.asarray(toks, dtype=object),
-                                      return_counts=True)
-            h = pd.util.hash_array(feats)  # (n_feat,) uint64
-            bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8), axis=1,
-                                 bitorder="little")  # (n_feat, 64) {0,1}
-            ones[i] = counts @ bits
-            totals[i] = counts.sum()
-        v = 2 * ones - totals[:, None]  # weighted ±1 sums; empty docs → 0
-        fp = ((v > 0).astype(np.uint64) * _BIT_WEIGHTS[None, :]) \
-            .sum(axis=1, dtype=np.uint64)
-        return pd.Series(fp.astype(np.int64))
-
-    return simhash
+    n = len(texts)
+    ones = np.zeros((n, SIMHASH_BITS), dtype=np.int64)
+    totals = np.zeros(n, dtype=np.int64)
+    for i, t in enumerate(texts.to_pylist()):
+        toks = ascii_ws_tokens(t or "")
+        if not toks:
+            continue
+        feats, counts = np.unique(np.asarray(toks, dtype=object),
+                                  return_counts=True)
+        h = pd.util.hash_array(feats)  # (n_feat,) uint64
+        bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8), axis=1,
+                             bitorder="little")  # (n_feat, 64) {0,1}
+        ones[i] = counts @ bits
+        totals[i] = counts.sum()
+    v = 2 * ones - totals[:, None]  # weighted ±1 sums; empty docs → 0
+    fp = ((v > 0).astype(np.uint64) * _BIT_WEIGHTS[None, :]) \
+        .sum(axis=1, dtype=np.uint64)
+    return pa.array(fp.view(np.int64))
 
 
 def simhash_block_keys(fp: Column, hamming_t: int = 3) -> Column:
@@ -104,9 +95,8 @@ def hamming_distance(a: Column, b: Column) -> Column:
 
 
 def simhash_near_pairs(
-    df: DataFrame, id_col: str = "url", fp_col: str = "simhash",
-    hamming_t: int = 3, bucket_cap: int = 256,
-    mat: "StageMaterializer | None" = None,
+    df: DataFrame, mat: "StageMaterializer", id_col: str = "url",
+    fp_col: str = "simhash", hamming_t: int = 3, bucket_cap: int = 256,
 ) -> DataFrame:
     """All pairs within Hamming distance t, via pigeonhole block grouping.
 
@@ -115,31 +105,23 @@ def simhash_near_pairs(
     to star pairing around the smallest member (connectivity preserved,
     O(n) pairs) — the same skew guard as the LSH tier.
 
-    ``mat`` cuts the fingerprint and membership stages; the caller owns
-    it and frees them with ``mat.cleanup()`` once the pairs are
-    consumed. Without one, a size-aware materializer over ``df`` is
-    built here, and nothing frees its cuts before the session ends.
+    ``df`` is read as given by the block keys and both verify sides,
+    so pass it cut (the near-dup pipeline passes its ``sigs``). ``mat``
+    cuts the block membership as ``simhash_memb``; the caller frees it.
     """
-    from doppel_spark.operators.lsh import pairs_from_buckets  # shared shape
-    from doppel_spark.operators.stage import StageMaterializer
+    from doppel_spark.operators.lsh import bucket_membership, pairs_from_membership
 
-    # Cut the fingerprint table first: the caller's ``df`` usually
-    # carries the SimHash UDF in its lineage, and everything below
-    # (block-key explosion → bucket membership → verify joins) would
-    # otherwise re-run that UDF once per evaluation path.
-    if mat is None:
-        mat = StageMaterializer.for_input(df, prefix="simhash")
-    # force=False: the membership cut inside pairs_from_buckets is the
-    # next blocking action and scans every fingerprint partition,
-    # filling this cache in that job (r6 — saves one driver action)
-    fps = mat.cut(df.select(F.col(id_col), F.col(fp_col)), "fps",
-                  force=False)
+    fps = df.select(F.col(id_col), F.col(fp_col))
     exploded = fps.select(
-        F.col(id_col), F.col(fp_col),
+        F.col(id_col),
         F.explode(simhash_block_keys(F.col(fp_col), hamming_t)).alias("block_key"),
     )
-    pairs = pairs_from_buckets(exploded, key_cols=["block_key"], id_col=id_col,
-                               bucket_cap=bucket_cap, mat=mat)
+    # named apart from the LSH tier's ``memb``: a cut name is unique per
+    # materializer (under a CheckpointStore it is the stage name)
+    memb = mat.cut(bucket_membership(exploded, ["block_key"], id_col=id_col),
+                   "simhash_memb")
+    pairs = pairs_from_membership(memb, ["block_key"], id_col=id_col,
+                                  bucket_cap=bucket_cap)
     a = fps.select(F.col(id_col).alias("url_a"), F.col(fp_col).alias("fp_a"))
     b = fps.select(F.col(id_col).alias("url_b"), F.col(fp_col).alias("fp_b"))
     return (

@@ -30,34 +30,22 @@ def _digest_or_sentinel(text_col: str, id_col: str):
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str = "url", text_col: str = "text",
-                small_input: bool = False) -> DataFrame:
+def exact_dedup(df: DataFrame, id_col: str = "url",
+                text_col: str = "text") -> DataFrame:
     """One row per distinct text content; survivor = min id per digest.
 
-    **Default = the scale path**: groupBy(digest) → min(id) survivor ids
+    **The scale path**: groupBy(digest) → min(id) survivor ids
     → left-semi join back on the id. The digest shuffle carries only
     (id, digest) — the text/full row never moves; the semi-join
     shuffles ids (and with AQE the survivor-id side broadcasts whenever
     it fits). The digest is computed twice (slim pass + output column),
     which at 100 TB is far cheaper than shuffling every text byte once.
 
-    ``small_input=True`` switches to a single full-row window over the
-    digest — one shuffle, one hash pass; the right plan only when rows
-    are small enough that shuffling them is cheaper than re-hashing.
-
     NULL text never dedups: rows with missing content get a per-row
     sentinel digest (≈ the reference's log-and-skip for unreadable
     files, /root/reference/internal/scanner/scanner.go:38-52 — an
     error row must not be merged with other error rows).
     """
-    if small_input:
-        w = Window.partitionBy("digest").orderBy(id_col)
-        return (
-            df.withColumn("digest", _digest_or_sentinel(text_col, id_col))
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
     slim = df.select(F.col(id_col),
                      _digest_or_sentinel(text_col, id_col).alias("digest"))
     keep = slim.groupBy("digest").agg(F.min(id_col).alias(id_col)).select(id_col)

@@ -28,7 +28,7 @@ hash-match, not silently blessed.
 
 Scale notes (100 TB):
 
-* **Training** (inside :func:`doc_xent` when no ``lm`` is given): one
+* **Training** (inside :func:`doc_xent`, on its own input): one
   groupBy over tokens with map-side partial aggregation — shuffle rows
   = distinct tokens per partition, not occurrences. The 1-row total joins back via an
   explicit ``broadcast``.
@@ -91,15 +91,14 @@ def _lm_from_counts(per_tok: DataFrame) -> DataFrame:
     )
 
 
-def doc_xent(df: DataFrame, lm: DataFrame | None = None,
-             id_col: str = "doc_id", text_col: str = "text",
+def doc_xent(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
              mat: StageMaterializer | None = None) -> DataFrame:
     """Per-document unigram cross-entropy in integer micro-nats.
 
     Returns ``(id, n_tokens, sum_lpm, xent_micros)`` where
     ``xent_micros = floor(sum_lpm / n_tokens)`` — mean per-token
-    negative log-likelihood under ``lm`` (default: trained on ``df``
-    itself). Token-less documents are KEPT with ``n_tokens = 0``,
+    negative log-likelihood under the unigram model trained on ``df``
+    itself. Token-less documents are KEPT with ``n_tokens = 0``,
     ``sum_lpm = 0`` and a NULL score (they carry no evidence either
     way; downstream bucketing skips NULLs).
 
@@ -110,10 +109,9 @@ def doc_xent(df: DataFrame, lm: DataFrame | None = None,
     way.
     """
     per_tok = _per_doc_token_counts(df, id_col, text_col)
-    if lm is None:
-        if mat is not None:
-            per_tok = mat.cut(per_tok, "lm_per_tok")
-        lm = _lm_from_counts(per_tok)
+    if mat is not None:
+        per_tok = mat.cut(per_tok, "lm_per_tok")
+    lm = _lm_from_counts(per_tok)
     per_doc = (per_tok.join(lm.select("token", "lpm"), "token")
                .groupBy(id_col)
                .agg(F.sum(F.col("c") * F.col("lpm")).alias("sum_lpm"),
@@ -169,8 +167,8 @@ def bucket_label(score: Column | str, t1: Column, t2: Column) -> Column:
     )
 
 
-def ccnet_buckets(df: DataFrame, lm: DataFrame | None = None,
-                  id_col: str = "doc_id", text_col: str = "text",
+def ccnet_buckets(df: DataFrame, id_col: str = "doc_id",
+                  text_col: str = "text",
                   mat: StageMaterializer | None = None) -> DataFrame:
     """Score ``df`` and label every document head/middle/tail.
 
@@ -185,7 +183,7 @@ def ccnet_buckets(df: DataFrame, lm: DataFrame | None = None,
     exactly once at scale. Without ``mat`` Catalyst recomputes the
     scoring chain per consumer — correct, and fine at bench scale.
     """
-    scores = doc_xent(df, lm=lm, id_col=id_col, text_col=text_col, mat=mat)
+    scores = doc_xent(df, id_col=id_col, text_col=text_col, mat=mat)
     if mat is not None:
         scores = mat.cut(scores, "lm_scores")
     th = tercile_thresholds(scores)

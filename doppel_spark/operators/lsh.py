@@ -39,10 +39,12 @@ from doppel_spark.functions.minhash import exact_jaccard_udf, signature_agreemen
 
 
 def signature_stage(df: DataFrame, cfg: NearDupConfig, id_col: str = "url",
-                    text_col: str = "text") -> DataFrame:
+                    text_col: str = "text", simhash: bool = False) -> DataFrame:
     """(id, signature binary, band_hashes array<long>) via
     ``mapInArrow`` — the flagship's signature stage with zero
-    pandas/Python-object traffic in EITHER direction.
+    pandas/Python-object traffic in EITHER direction. ``simhash`` adds
+    a ``simhash`` long from the same batch (one read of each text;
+    :func:`~doppel_spark.functions.simhash.simhash_arrow_column`).
 
     Round-4 profiling showed the stage is bound by the Arrow worker
     round trip, not the (already whole-batch-vectorized) kernel: the
@@ -53,8 +55,8 @@ def signature_stage(df: DataFrame, cfg: NearDupConfig, id_col: str = "url",
     binary buffer (the kernel's numpy output, zero-copy) and the band
     column is assembled O(1) per batch
     (minhash.sig_bands_arrow_columns). It is the library's one
-    signature transport; every signature byte is checked against the
-    per-document spec in tests.
+    signature transport; every signature byte and fingerprint is
+    checked against the per-document spec in tests.
 
     Only (id, text) pass through the worker; callers needing more
     columns join on ``id_col`` afterwards.
@@ -66,28 +68,32 @@ def signature_stage(df: DataFrame, cfg: NearDupConfig, id_col: str = "url",
         perm_constants,
         sig_bands_arrow_columns,
     )
+    from doppel_spark.functions.simhash import simhash_arrow_column
 
     consts = perm_constants(cfg.num_perm, cfg.seed)
     num_perm, k, bands = cfg.num_perm, cfg.shingle_k, cfg.bands
     in_df = df.select(F.col(id_col), F.col(text_col))
-    out_schema = T.StructType([
+    fields = [
         in_df.schema[id_col],
         T.StructField("signature", T.BinaryType()),
         T.StructField("band_hashes", T.ArrayType(T.LongType())),
-    ])
+    ]
+    if simhash:
+        fields.append(T.StructField("simhash", T.LongType()))
 
     def gen(batches):
         import pyarrow as pa
 
         pool = _BufPool()
         for batch in batches:
-            sig_col, band_col = sig_bands_arrow_columns(
-                batch.column(1), pool, consts, num_perm, k, bands)
+            cols = [batch.column(0), *sig_bands_arrow_columns(
+                batch.column(1), pool, consts, num_perm, k, bands)]
+            if simhash:
+                cols.append(simhash_arrow_column(batch.column(1)))
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0), sig_col, band_col],
-                names=[id_col, "signature", "band_hashes"])
+                cols, names=[f.name for f in fields])
 
-    return in_df.mapInArrow(gen, out_schema)
+    return in_df.mapInArrow(gen, T.StructType(fields))
 
 
 def band_keys(sig_df: DataFrame, cfg: NearDupConfig, id_col: str = "url") -> DataFrame:
@@ -182,8 +188,7 @@ def pairs_from_buckets(
     one-off cut is taken here. Note the subtree above ``exploded`` is
     still evaluated twice while *building* the membership table
     (bucket stats + join-back), so callers should cut their UDF stage
-    first — see ``substring_dup_pairs`` / ``simhash_near_pairs`` /
-    ``embedding_neardup_pairs``."""
+    first — see ``substring_dup_pairs`` / ``embedding_neardup_pairs``."""
     from doppel_spark.operators.stage import StageMaterializer
 
     if mat is None:

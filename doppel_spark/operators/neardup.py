@@ -5,12 +5,16 @@ generalized):
 
     pages → exact-dedup pre-pass (sha256 digest, keep min-id rep)
           → MinHash signatures over REPRESENTATIVES ONLY
+            [optional] + SimHash fingerprints, in the same Arrow pass
           → LSH band keys → bucket pair explosion (skew-capped)
           → signature-agreement verification (JVM-only)
           [optional] ∪ SimHash Hamming pairs (short docs / fallback)
           ∪ exact-group (rep → member) edges
           → connected components (hash-min label propagation)
           → clusters + skew/recall metrics
+
+One ``StageMaterializer`` cuts every stage; with a ``CheckpointStore``
+the cuts are durable and a rerun recomputes only connected components.
 
 The exact-dedup pre-pass is the web-scale move: real crawls are
 30–60 % byte-identical, and an exact duplicate would otherwise collide
@@ -23,14 +27,14 @@ assignments are identical to the naive pipeline.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from doppel_spark.config import NearDupConfig
 from doppel_spark.functions.digests import full_digest
-from doppel_spark.functions.simhash import simhash_near_pairs, simhash_udf
+from doppel_spark.functions.simhash import simhash_near_pairs
 from doppel_spark.operators.components import connected_components
 from doppel_spark.operators.lsh import (
     band_keys,
@@ -46,13 +50,11 @@ from doppel_spark.plans.inspect import physical_plan
 
 @dataclass
 class NearDupResult:
-    signatures: DataFrame   # (url, signature array<int>)
+    signatures: DataFrame   # (url, rid, signature, band_hashes[, simhash]) of reps
     pairs: DataFrame        # verified (url_a, url_b, jaccard_est)
     clusters: DataFrame     # (url, cluster_rep, cluster_id) — multi-doc clusters
     bucket_stats: DataFrame  # skew accounting (capped buckets, skipped pairs)
-    #: the run's materializers: the pipeline's, plus SimHash's when used
-    materializers: list[StageMaterializer] = field(default_factory=list,
-                                                   repr=False)
+    materializer: StageMaterializer  # the run's one: every cut, SimHash's too
 
     def cluster_summary(self) -> DataFrame:
         """(cluster_id, n_docs, urls sorted) for multi-doc clusters."""
@@ -70,8 +72,7 @@ class NearDupResult:
         ``signatures``/``pairs``/``clusters``, so later reads raise —
         deliberately not named ``unpersist``, whose Spark contract
         (safe to call anytime, frames recompute) this does not honor."""
-        for mat in self.materializers:
-            mat.cleanup()
+        self.materializer.cleanup()
 
 
 def _narrow(df: DataFrame, par: int) -> bool:
@@ -110,20 +111,22 @@ def near_dup_pipeline(
     mat: StageMaterializer | None = None,
 ) -> NearDupResult:
     """Flagship near-dup clustering. ``mat`` cuts the five stages
-    (digests, sigs, memb, cand, pairs) and the CC rounds; by default it
-    is picked from the input's size estimate: small corpora persist — a
-    scratch table's fixed cost (~10 s across the run) only pays for
-    itself at ≳300 k docs, where it took local[16] from 185 s to 44 s.
-    One built with a ``CheckpointStore`` makes the cuts durable, and a
-    rerun on that store recomputes only CC (and the SimHash pairs). See
+    (digests, sigs, memb, cand, pairs), with ``use_simhash`` SimHash's
+    block membership (``simhash_memb``; its fingerprints ride in
+    ``sigs``), and the CC rounds; by default it is picked from the
+    input's size estimate: small corpora persist — a scratch table's
+    fixed cost (~10 s across the run) only pays for itself at ≳300 k
+    docs, where it took local[16] from 185 s to 44 s. One built with a
+    ``CheckpointStore`` makes the cuts durable, and a rerun on that
+    store recomputes only CC. See
     :class:`~doppel_spark.operators.stage.StageMaterializer`.
 
-    The run's own actions (the cuts, SimHash's cuts, connected
-    components) plan under ``mat.static_plan(base)``: a small input
-    without a store, whose size estimate is within
-    ``spark.sql.autoBroadcastJoinThreshold``, turns AQE off for them,
-    halving their Spark jobs; the session's setting is restored on
-    return, and the returned frames plan under it."""
+    The run's own actions (the cuts, connected components) plan under
+    ``mat.static_plan(base)``: a small input without a store, whose
+    size estimate is within ``spark.sql.autoBroadcastJoinThreshold``,
+    turns AQE off for them, halving their Spark jobs; the session's
+    setting is restored on return, and the returned frames plan under
+    it."""
     cfg = cfg or NearDupConfig()
     base = pages.select(F.col(id_col), F.col(text_col))
     if mat is None:
@@ -193,9 +196,11 @@ def _run(base: DataFrame, cfg: NearDupConfig, id_col: str, text_col: str,
     # (expected spurious pairs ≈ n²/2⁶⁴ — a handful even at 10¹² docs);
     # true-pair loss requires both members to collide, ~2⁻⁶⁴ per pair.
     sigs = _materialize(
-        signature_stage(reps, cfg, id_col=id_col, text_col=text_col)
-        .select(id_col, F.xxhash64(id_col).alias("rid"),
-                "signature", "band_hashes"), "sigs", force=False)
+        signature_stage(reps, cfg, id_col=id_col, text_col=text_col,
+                        simhash=use_simhash)
+        .select(id_col, F.xxhash64(id_col).alias("rid"), "signature",
+                "band_hashes", *(["simhash"] if use_simhash else [])),
+        "sigs", force=False)
     # (sigs force=False: the memb cut right below scans every signature
     # partition through band_keys, filling the cache in that job — the
     # signature kernel still runs exactly once; see digests note above.
@@ -244,14 +249,11 @@ def _run(base: DataFrame, cfg: NearDupConfig, id_col: str, text_col: str,
     # everything downstream (CC, bucket stats) reads the sigs/pairs
     # scratch tables; the digest table has no remaining consumer
     edges = pairs.select("url_a", "url_b")
-    mats = [mat]
     if use_simhash:
-        sh = reps.select(F.col(id_col), simhash_udf()(F.col(text_col)).alias("simhash"))
-        # its own transient materializer (a rerun on a durable store
-        # recomputes SimHash), owned here so cleanup() frees its cuts
-        mats.append(StageMaterializer.for_input(sh, prefix="simhash"))
-        sh_pairs = simhash_near_pairs(sh, id_col=id_col, hamming_t=cfg.simhash_hamming,
-                                      bucket_cap=cfg.bucket_cap, mat=mats[-1])
+        # the fingerprints ride in the sigs cut
+        sh_pairs = simhash_near_pairs(sigs, mat, id_col=id_col,
+                                      hamming_t=cfg.simhash_hamming,
+                                      bucket_cap=cfg.bucket_cap)
         edges = edges.union(sh_pairs.select("url_a", "url_b")).distinct()
 
     # CC rounds cut through the SAME materializer — one strategy for
@@ -263,4 +265,4 @@ def _run(base: DataFrame, cfg: NearDupConfig, id_col: str, text_col: str,
         ["band_hash"], bucket_cap=cfg.bucket_cap)
     return NearDupResult(signatures=sigs, pairs=pairs,
                          clusters=comps, bucket_stats=stats,
-                         materializers=mats)
+                         materializer=mat)

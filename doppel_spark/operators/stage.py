@@ -159,6 +159,7 @@ class StageMaterializer:
         #: id(returned frame) → ("persist", df) | ("table", path); lets
         #: :meth:`release` free one cut early in iterative pipelines
         self._frames: dict[int, tuple[str, object]] = {}
+        self._names: set[str] = set()  # names cut so far
 
     @classmethod
     def for_input(cls, *dfs: DataFrame, prefix: str = "stage",
@@ -217,6 +218,8 @@ class StageMaterializer:
         """Materialize ``df`` and return a frame reading the result.
 
         With a store this is ``store.run(name, ...)``; ``force`` is moot.
+        A name is one stage: a second cut of it raises ``ValueError``
+        (under a store it would resume the first one's table).
 
         ``force=False`` (persist mode only) skips the eager ``count()``:
         the cache fills on the first downstream action instead. Only
@@ -226,6 +229,9 @@ class StageMaterializer:
         Sequential-consumer callers (iterative loops) save one job. Only
         one block manager serializes a lazy fill, so a non-local master
         always forces the count."""
+        if name in self._names:
+            raise ValueError(f"StageMaterializer: {name!r} is already cut")
+        self._names.add(name)
         if self.store is not None:
             return self.store.run(name, lambda: df)
         if self.mode == "persist":

@@ -139,8 +139,9 @@ def main(argv: list[str] | None = None) -> None:
         if args.checkpoint:
             from doppel_spark.checkpoint import CheckpointStore
             from doppel_spark.operators.stage import StageMaterializer
+            # --simhash keys the store: the sigs stage carries SimHash
             nstore = CheckpointStore(spark, os.path.join(args.checkpoint, "near"),
-                                     run_config=(_fc_key, repr(ncfg)))
+                                     run_config=(_fc_key, repr(ncfg), cfg.simhash))
             mat = StageMaterializer.for_input(pages.select("url", "text"),
                                               prefix="neardup", store=nstore)
         ndr = near_dup_pipeline(pages, ncfg, use_simhash=cfg.simhash, mat=mat)

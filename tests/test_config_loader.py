@@ -93,6 +93,15 @@ def test_validation_rejects(env):
         load_job_config(env=env)
 
 
+def test_removed_simhash_bits_key_is_rejected(tmp_path):
+    # NearDupConfig.simhash_bits was never read (SimHash is 64-bit);
+    # a config file still setting it fails loudly, not silently
+    (tmp_path / "config.json").write_text(
+        json.dumps({"neardup": {"simhash_bits": 64}}))
+    with pytest.raises(FilterConfigError, match="neardup.simhash_bits"):
+        load_job_config(config_dir=str(tmp_path), env={})
+
+
 @pytest.mark.parametrize("env", [
     {"DOPPEL_SPARK_FILTER_NO_SUCH_FIELD": "1"},     # unknown key
     {"DOPPEL_SPARK_BOGUS_SECTION_X": "1"},          # unknown section

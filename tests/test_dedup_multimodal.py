@@ -20,9 +20,6 @@ def test_exact_dedup_keep_min_id(spark, docs):
     assert kept == {"u://a/1", "u://b/1", "u://c/1"}
     # survivors keep their full row + digest column
     assert set(out.columns) == {"url", "text", "digest"}
-    # small-input window path: identical result
-    win = exact_dedup(docs, small_input=True)
-    assert {r["url"] for r in win.collect()} == kept
 
 
 def test_exact_dedup_scale_plan_no_text_shuffle(spark, docs):

@@ -9,6 +9,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -35,7 +36,8 @@ def _spec_sigs(texts: pd.Series) -> np.ndarray:
 
 
 def _batch(texts: pd.Series, **kw) -> np.ndarray:
-    return _batch_sig_matrix(texts, _BufPool(), CONSTS, NUM_PERM, K, **kw)
+    return _batch_sig_matrix(pa.array(texts, type=pa.string()), _BufPool(),
+                             CONSTS, NUM_PERM, K, **kw)
 
 
 def test_edge_cases_match_spec():
@@ -104,12 +106,11 @@ def test_unicode_whitespace_kernel_spec_parity():
 
 def test_arrow_input_path_matches_pandas():
     # the mapInArrow stage feeds the kernel raw pyarrow arrays — values
-    # must match the pandas path on edge cases, slices, and large_string
-    import pyarrow as pa
-
+    # must match the per-doc spec over the pandas texts on edge cases,
+    # slices, and large_string
     texts = pd.Series(["", None, "one", "a b c d e f g", "tok " * 50,
                        "naïve café 🙂 字符", "x" * 9000], dtype=object)
-    ref = _batch(texts)
+    ref = _spec_sigs(texts)
     arr = pa.array(list(texts), type=pa.string())
     assert np.array_equal(
         _batch_sig_matrix(arr, _BufPool(), CONSTS, NUM_PERM, K), ref)

@@ -15,7 +15,7 @@ from doppel_spark.functions.minhash import (
     shingle_set,
     signature_agreement,
 )
-from doppel_spark.functions.simhash import simhash_near_pairs, simhash_udf
+from doppel_spark.functions.simhash import simhash_near_pairs
 from doppel_spark.operators.components import connected_components
 from doppel_spark.operators.lsh import (
     band_keys,
@@ -24,6 +24,7 @@ from doppel_spark.operators.lsh import (
     signature_stage,
 )
 from doppel_spark.operators.neardup import near_dup_pipeline
+from doppel_spark.operators.stage import StageMaterializer
 
 CFG = NearDupConfig()
 
@@ -174,11 +175,13 @@ def test_simhash_near_pairs(spark):
     far = " ".join(f"other{i}" for i in range(300))
     df = spark.createDataFrame(
         [("a", base), ("b", near), ("c", far)], "url string, text string")
-    sh = df.select("url", simhash_udf()(F.col("text")).alias("simhash"))
+    sh = signature_stage(df, CFG, simhash=True).select("url", "simhash")
     vals = {r["url"]: r["simhash"] for r in sh.collect()}
     assert vals["a"] != vals["c"]
+    mat = StageMaterializer.for_input(sh)
     pairs = {(r["url_a"], r["url_b"])
-             for r in simhash_near_pairs(sh, hamming_t=3).collect()}
+             for r in simhash_near_pairs(sh, mat, hamming_t=3).collect()}
+    mat.cleanup()
     assert ("a", "b") in pairs
     assert ("a", "c") not in pairs and ("c", "a") not in pairs
 
@@ -199,8 +202,8 @@ def test_neardup_cleanup_frees_every_cache(spark, use_simhash):
 
 def test_simhash_deterministic(spark):
     df = spark.createDataFrame([("a", "hello world foo bar")], "url string, text string")
-    v1 = df.select(simhash_udf()(F.col("text"))).collect()[0][0]
-    v2 = df.select(simhash_udf()(F.col("text"))).collect()[0][0]
+    v1 = signature_stage(df, CFG, simhash=True).collect()[0]["simhash"]
+    v2 = signature_stage(df, CFG, simhash=True).collect()[0]["simhash"]
     assert v1 == v2 and isinstance(v1, int)
 
 

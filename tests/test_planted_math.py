@@ -19,6 +19,7 @@ import sys
 from pathlib import Path
 
 import numpy as np
+import pyarrow as pa
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -27,6 +28,7 @@ from doppel_spark.functions.minhash import (  # noqa: E402
     _batch_sig_matrix,
     perm_constants,
 )
+from doppel_spark.functions.simhash import simhash_arrow_column  # noqa: E402
 from minhash_spec import shingle_hashes  # noqa: E402
 
 K = 5  # NearDupConfig.shingle_k default — what the planted queries run
@@ -59,13 +61,11 @@ def test_repetition_breaks_below_k_tokens():
 
 
 def test_repetition_signatures_identical_and_cross_group_disjoint():
-    import pandas as pd
-
     consts = perm_constants(128, 42)
     base_a = _base("aaaa", 12)
     base_b = _base("bbbb", 12)
-    texts = pd.Series([_rep(base_a, 2), _rep(base_a, 3), _rep(base_a, 4),
-                       _rep(base_b, 2)])
+    texts = pa.array([_rep(base_a, 2), _rep(base_a, 3), _rep(base_a, 4),
+                      _rep(base_b, 2)])
     sigs = _batch_sig_matrix(texts, _BufPool(), consts, 128, K)
     assert np.array_equal(sigs[0], sigs[1])
     assert np.array_equal(sigs[1], sigs[2])
@@ -78,20 +78,10 @@ def test_repetition_signatures_identical_and_cross_group_disjoint():
 
 
 def test_rotation_simhash_identical_bytes_differ():
-    # replicate simhash_udf's per-doc math (simhash.py:52-73) — the
-    # Spark path is exercised end-to-end by the contract query
-    import pandas as pd
-
+    # the signature stage's SimHash kernel, outside Spark — the Spark
+    # path is exercised end-to-end by the contract query
     def simhash(text: str) -> int:
-        toks = text.split()
-        feats, counts = np.unique(np.asarray(toks, dtype=object),
-                                  return_counts=True)
-        h = pd.util.hash_array(feats)
-        bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8), axis=1,
-                             bitorder="little")
-        v = 2 * (counts @ bits) - counts.sum()
-        w = np.uint64(1) << np.arange(64, dtype=np.uint64)
-        return int(((v > 0).astype(np.uint64) * w).sum(dtype=np.uint64))
+        return simhash_arrow_column(pa.array([text]))[0].as_py()
 
     toks = [f"cafew{j}" for j in range(12)]
     a = " ".join(toks)

@@ -223,7 +223,8 @@ def test_neardup_pipeline_materialization_policies_identical(
     persist mode; table mode always writes eagerly, and the durable
     policy publishes every cut as a checkpoint stage. All three must
     produce identical pairs and clusters, with and without the SimHash
-    union (whose own fingerprint cut fills lazily too) — this pins the
+    union (whose fingerprints ride in the sigs cut and whose block
+    membership is cut by the same materializer) — this pins the
     materialization policy to value identity."""
     from doppel_spark.checkpoint import CheckpointStore
     from doppel_spark.config import NearDupConfig

@@ -117,7 +117,8 @@ def test_job_tables_identical_with_and_without_checkpoint(spark, tmp_path):
     """One near-dup pipeline behind the job: --checkpoint only makes its
     cuts durable, so clusters, verified pairs and bucket stats are the
     same row sets with and without it, with and without --simhash, and
-    again when a checkpointed run resumes from its store."""
+    again when a checkpointed run resumes from its store, also from one
+    written without --simhash."""
     import sys as _sys
 
     _sys.path.insert(0, str(REPO / "jobs"))
@@ -136,10 +137,15 @@ def test_job_tables_identical_with_and_without_checkpoint(spark, tmp_path):
                           spark.read.parquet(f"{out}/{t}").collect())
                 for t in ("clusters", "pairs", "bucket_stats")}
 
+    ephemeral = {}
     for sh in ((), ("--simhash",)):
         tag = "sh" if sh else "lsh"
         ckpt = str(tmp_path / f"ckpt_{tag}")
-        ephemeral = tables(f"eph_{tag}", *sh)
-        assert ephemeral["pairs"] and ephemeral["clusters"]
-        assert tables(f"ck_{tag}", "--checkpoint", ckpt, *sh) == ephemeral
-        assert tables(f"re_{tag}", "--checkpoint", ckpt, *sh) == ephemeral
+        ephemeral[tag] = tables(f"eph_{tag}", *sh)
+        assert ephemeral[tag]["pairs"] and ephemeral[tag]["clusters"]
+        assert tables(f"ck_{tag}", "--checkpoint", ckpt, *sh) == ephemeral[tag]
+        assert tables(f"re_{tag}", "--checkpoint", ckpt, *sh) == ephemeral[tag]
+    # --simhash keys the store: a store written without it is not
+    # resumed by a --simhash run (its sigs stage has no fingerprints)
+    assert tables("lsh_then_sh", "--checkpoint", str(tmp_path / "ckpt_lsh"),
+                  "--simhash") == ephemeral["sh"]

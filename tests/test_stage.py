@@ -204,6 +204,18 @@ def test_durable_cut_is_a_stage_and_iter_cuts_stay_transient(spark, tmp_path):
     assert spark.read.parquet(os.path.join(store.root, "s1")).count() == 40
 
 
+def test_cut_name_is_unique_per_materializer(spark, tmp_path):
+    # under a store a reused name would resume the first stage's table
+    from doppel_spark.checkpoint import CheckpointStore
+
+    store = CheckpointStore(spark, str(tmp_path / "ck"))
+    mat = StageMaterializer(spark, mode="persist", prefix="t", store=store)
+    assert mat.cut(spark.range(3).toDF("id"), "x").count() == 3
+    with pytest.raises(ValueError, match="'x' is already cut"):
+        mat.cut(spark.range(7).toDF("id"), "x")
+    mat.cleanup()
+
+
 # --- plan mode: a small input plans the pipeline's actions statically ---
 
 AQE = "spark.sql.adaptive.enabled"

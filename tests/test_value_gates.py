@@ -1,10 +1,11 @@
-"""Value gates for two rows-only contract queries.
+"""Value gates for three rows-only contract queries.
 
-``minhash_lsh_clusters`` and ``simhash_fingerprints`` have no DuckDB
-oracle (their values are defined by engine hash functions), so the
-contract sweep only checks that they run. These tests recompute both at
-sf0.01 from the per-document Python specs — no Spark, no batch kernel —
-and compare every row (and, for the clusters, every stage's values).
+``minhash_lsh_clusters``, ``simhash_fingerprints`` and
+``simhash_near_pairs`` have no DuckDB oracle (their values are defined
+by engine hash functions), so the contract sweep only checks that they
+run. These tests recompute them at sf0.01 from the per-document Python
+specs — no Spark, no batch kernel — and compare every row (and, for the
+clusters, every stage's values).
 """
 
 from __future__ import annotations
@@ -142,16 +143,53 @@ def _spec_simhash(tokens: list[str], hashes: dict[str, int]) -> int:
     return fp - (1 << 64) if fp >> 63 else fp  # as Spark's signed long
 
 
+def _spec_fingerprints(texts: list[str]) -> list[int]:
+    """``_spec_simhash`` of each text, as Spark's signed long."""
+    tokens = [ascii_ws_tokens(t or "") for t in texts]
+    vocab = sorted({t for toks in tokens for t in toks})
+    # the feature hash (pandas' SipHash) is elementwise: one call for all
+    hashes = dict(zip(vocab, (int(h) for h in pd.util.hash_array(
+        np.asarray(vocab, dtype=object)))))
+    return [_spec_simhash(toks, hashes) for toks in tokens]
+
+
 def test_simhash_fingerprints_matches_python_spec(spark):
     got = dict(entrymod.queries()["simhash_fingerprints"](
         spark, SF_DIR).collect())
     docs = _documents()
-    tokens = {d: ascii_ws_tokens(t or "") for d, t in
-              zip(docs["doc_id"], docs["text"])}
-    vocab = sorted({t for toks in tokens.values() for t in toks})
-    # the feature hash (pandas' SipHash) is elementwise: one call for all
-    hashes = dict(zip(vocab, (int(h) for h in pd.util.hash_array(
-        np.asarray(vocab, dtype=object)))))
-    want = {d: _spec_simhash(toks, hashes) for d, toks in tokens.items()}
+    want = dict(zip(docs["doc_id"], _spec_fingerprints(docs["text"].tolist())))
     assert len(set(want.values())) > 1
+    assert got == want
+
+
+def test_simhash_near_pairs_matches_python_spec(spark):
+    """The query's rows are exactly the pairs within Hamming 3 of the
+    spec fingerprints, brute-forced over sf0.01 plus the query's 20
+    edited copies (doc_id + 3 000 000, text + " zyxq")."""
+    hamming_t, bucket_cap = 3, NearDupConfig().bucket_cap
+    docs = _documents()
+    edited = docs[docs["doc_id"] < 20]
+    urls = [str(d) for d in docs["doc_id"]] + \
+        [str(d + 3_000_000) for d in edited["doc_id"]]
+    texts = docs["text"].tolist() + [t + " zyxq" for t in edited["text"]]
+    fps = [fp & (1 << 64) - 1 for fp in _spec_fingerprints(texts)]
+    # no pigeonhole block bucket is over the cap, so the query pairs
+    # every bucket in full and the brute-force set is its exact spec
+    width = 64 // (hamming_t + 1)
+    blocks = defaultdict(int)
+    for fp in fps:
+        for blk in range(hamming_t + 1):
+            blocks[blk, fp >> (blk * width) & (1 << width) - 1] += 1
+    assert max(blocks.values()) <= bucket_cap
+    want = set()
+    for i, j in combinations(range(len(urls)), 2):
+        d = (fps[i] ^ fps[j]).bit_count()
+        if d <= hamming_t:
+            want.add((*sorted((urls[i], urls[j])), d))
+    got = {tuple(r) for r in entrymod.queries()["simhash_near_pairs"](
+        spark, SF_DIR).collect()}
+    # non-vacuous: edited copies pair with their originals, and some
+    # pairs are near but not identical
+    assert any(b == str(int(a) + 3_000_000) for a, b, _ in want)
+    assert any(d > 0 for *_, d in want)
     assert got == want
