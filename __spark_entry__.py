@@ -91,6 +91,7 @@ from doppel_spark.operators.similarity import (  # noqa: E402
     lsh_ann_topk,
     topk_recall,
 )
+from doppel_spark.operators.stage import StageMaterializer  # noqa: E402
 from doppel_spark.operators.suffix import substring_dup_pairs  # noqa: E402
 from doppel_spark.session import ship_package  # noqa: E402
 
@@ -878,6 +879,7 @@ def _q_token_budget_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget = (2 * total) // 5
     return token_budget_sample(
         docs, budget, token_count("text"), id_col="doc_id",
+        mat=StageMaterializer.for_input(docs, prefix="tokbudget"),
     ).select("doc_id", "n_chars")
 
 
@@ -947,8 +949,9 @@ def _q_incremental_new_docs_bloom(spark: SparkSession, sf_dir: str) -> DataFrame
                .withColumn("doc_id",
                            F.col("doc_id") + F.lit(INCR_REFETCH_OFFSET)))
     incoming = docs.filter(F.col("doc_id") % 5 == 0).unionByName(refetch)
+    mat = StageMaterializer.for_input(incoming, prefix="bloom")
     return cross_snapshot_new_bloom(incoming, seen, id_col="doc_id",
-                                    fpr=0.01) \
+                                    fpr=0.01, mat=mat) \
         .select("doc_id", "lang", "n_chars")
 
 
@@ -996,7 +999,8 @@ def _q_host_rank_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % HR_HOSTS).alias("src"),
         ((F.col("doc_id") * HR_MUL + HR_ADD) % HR_HOSTS).alias("dst"))
     return host_rank(edges, iterations=HR_ITER,
-                     damping_num=HR_DNUM, damping_den=HR_DDEN)
+                     damping_num=HR_DNUM, damping_den=HR_DDEN,
+                     mat=StageMaterializer.for_input(edges, prefix="rank"))
 
 
 #: outlink plant: 13 hosts; link 1 targets an affine image (self when
@@ -1237,7 +1241,6 @@ def _simhash_pairs(df: DataFrame, id_col: str) -> DataFrame:
     """Pairs within Hamming 3 over ``df``'s texts; the fingerprints are
     cut (filled lazily by the membership cut's scan): one kernel run."""
     from doppel_spark.functions.simhash import simhash_near_pairs
-    from doppel_spark.operators.stage import StageMaterializer
 
     fps = _simhashes(df, id_col)
     mat = StageMaterializer.for_input(fps, prefix="simhash")
@@ -1253,7 +1256,9 @@ def _q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship_package(spark)
     docs = _docs(spark, sf_dir).withColumn("url", F.col("doc_id").cast("string"))
-    return substring_dup_pairs(docs, min_len=200)
+    mat = StageMaterializer.for_input(docs.select("url", "text"),
+                                      prefix="suffix")
+    return substring_dup_pairs(docs, min_len=200, mat=mat)
 
 
 def _q_substring_pairs_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1313,7 +1318,8 @@ def _q_substring_pairs_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lit(":"), F.col("mc")).alias("url"),
         F.concat(F.col("host"), F.col("mc"), payload, F.col("mc"))
         .alias("text"))
-    return substring_dup_pairs(composites, min_len=SUB_MIN_LEN)
+    mat = StageMaterializer.for_input(composites, prefix="suffix")
+    return substring_dup_pairs(composites, min_len=SUB_MIN_LEN, mat=mat)
 
 
 def _q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1401,8 +1407,10 @@ def _q_emb_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x, y: (x + F.lit(0.03) * y).cast("float"),
         ).alias("embedding"),
     )
+    emb = _spread(emb.union(planted))
     return embedding_neardup_pairs(
-        _spread(emb.union(planted)), threshold=0.95, dim=EMB_DIM,
+        emb, threshold=0.95, dim=EMB_DIM,
+        mat=StageMaterializer.for_input(emb, prefix="emblsh"),
     ).select("id_a", "id_b")
 
 
@@ -1438,7 +1446,9 @@ def _q_semantic_dedup_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
                              (F.col("m") + 1).cast("float"))
             .otherwise(F.lit(0.0).cast("float")),
         ).alias("embedding"))
-    return semantic_dedup(emb, threshold=0.95, dim=EMB_DIM)
+    return semantic_dedup(
+        emb, threshold=0.95, dim=EMB_DIM,
+        mat=StageMaterializer.for_input(emb, prefix="semdedup"))
 
 
 def _q_ngram_jaccard_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1598,7 +1608,9 @@ def _q_fuzzy_contamination_planted(spark: SparkSession, sf_dir: str) -> DataFram
                 F.expr(f"repeat(concat({_PLANT_BASE_SQL}, ' '), 3)")
                 .alias("text"))
     )
-    out = fuzzy_contamination_pairs(corp, evl, NearDupConfig())
+    out = fuzzy_contamination_pairs(
+        corp, evl, NearDupConfig(),
+        mat=StageMaterializer.for_input(corp, evl, prefix="fuzzycontam"))
     return out.select(
         "doc_id", "eval_id",
         F.floor(F.col("jaccard_est") * 1_000_000).cast("long")
@@ -1639,7 +1651,8 @@ def _q_xsnap_neardup_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen_sig = signature_stage(seen, NearDupConfig(), id_col="doc_id")
     out = cross_snapshot_neardup_pairs(
         incoming, seen_sig, NearDupConfig(), id_col="doc_id",
-        seen_signed=True)
+        seen_signed=True,
+        mat=StageMaterializer.for_input(incoming, prefix="xsnapnd"))
     return out.select(
         "doc_id_new", "doc_id_seen",
         F.floor(F.col("jaccard_est") * 1_000_000).cast("long")

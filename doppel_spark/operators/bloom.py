@@ -34,6 +34,10 @@ side only ever sees two int64 columns; membership tests and bit
 setting are whole-batch numpy (no per-row Python anywhere, matching
 the engine-wide vectorized-only rule, plans/inspect.py).
 
+The one multi-consumer frame (the hashed incoming projection) is cut
+through the caller's :class:`~doppel_spark.operators.stage
+.StageMaterializer`; the caller frees it once the result is consumed.
+
 Reference tie: this is the cross-run generalization of the
 reference's "skip files already in a known group" early exit
 (/root/reference/internal/scanner/finder.go:84-96) — a cheap
@@ -48,6 +52,8 @@ from typing import Iterator
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from doppel_spark.operators.stage import StageMaterializer
 
 #: second-hash salt (any fixed literal independent of the plain hash)
 _H2_SALT = "doppel-bloom-h2"
@@ -179,7 +185,8 @@ def cross_snapshot_new_bloom(
     n_bits: int | None = None,
     n_hashes: int | None = None,
     max_build_partitions: int = 64,
-    mat=None,
+    *,
+    mat: StageMaterializer,
 ) -> DataFrame:
     """Bloom-accelerated :func:`~doppel_spark.operators.dedup
     .cross_snapshot_new` — row-identical output, join traffic cut to
@@ -207,16 +214,13 @@ def cross_snapshot_new_bloom(
     The hashed incoming projection feeds three consumers (the two
     bloom branches and nothing else reads it twice — but Spark has no
     common-subtree elimination, so without a cut each branch would
-    re-scan incoming and re-hash every text). It is cut through
-    ``mat`` (a :class:`~doppel_spark.operators.stage
-    .StageMaterializer`); when omitted, a one-off materializer is
-    created and its scratch registered at interpreter exit — same
-    ad-hoc contract as :func:`~doppel_spark.operators.components
-    .connected_components`.
+    re-scan incoming and re-hash every text). It is cut through the
+    caller's ``mat`` (a :class:`~doppel_spark.operators.stage
+    .StageMaterializer`), which the caller frees with
+    ``mat.cleanup()`` once the returned frame is consumed.
     """
     from doppel_spark.operators.dedup import _digest_or_sentinel
     from doppel_spark.functions.digests import full_digest
-    from doppel_spark.operators.stage import StageMaterializer
 
     seen_digests = (seen.select(full_digest(text_col).alias("digest"))
                     .filter(F.col("digest").isNotNull())
@@ -239,11 +243,6 @@ def cross_snapshot_new_bloom(
     inc = inc.select(id_col, "digest", *_hash_cols(F.col("digest")))
     inc = inc.withColumn("_maybe", maybe_udf(F.col("h1"), F.col("h2")))
 
-    if mat is None:
-        mat = StageMaterializer.for_input(incoming, prefix="bloom")
-        import atexit
-
-        atexit.register(mat.cleanup)
     inc = mat.cut(inc, "bloom_flags")
 
     definite_new = inc.filter(~F.col("_maybe")).select(id_col)

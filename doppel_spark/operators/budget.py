@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from doppel_spark.functions.splits import BUCKETS, uniform_bucket
+from doppel_spark.operators.stage import StageMaterializer
 
 #: seed namespace for the budget-cut ordering bucket
 BUDGET_SEED = "tokbudget"
@@ -55,6 +56,8 @@ def token_budget_sample(
     id_col: str = "doc_id",
     seed: str = BUDGET_SEED,
     blocks: int = 1024,
+    *,
+    mat: StageMaterializer,
 ) -> DataFrame:
     """Rows of ``df`` forming the maximal budget-respecting prefix.
 
@@ -66,6 +69,9 @@ def token_budget_sample(
     Returns the winning input rows at full width (left-semi join on
     ``id_col`` — text never enters any shuffle here; the block agg and
     the boundary window both move slim ``(id, bucket, tokens)`` rows).
+
+    ``mat`` — the caller's materializer; it owns the slim-row cut, which
+    the caller frees with ``mat.cleanup()`` once the result is consumed.
     """
     if budget_tokens < 0:
         raise ValueError(f"budget_tokens must be >= 0, got {budget_tokens}")
@@ -84,15 +90,7 @@ def token_budget_sample(
     )
     # slim feeds BOTH the block agg and the winner filters; token_col is
     # typically an expression over the full text, so without a cut the
-    # corpus would be scanned (and tokenized) twice. ~24-byte rows:
-    # persist for small inputs, scratch table at scale (same ad-hoc
-    # lifecycle as connected_components' materializer)
-    import atexit
-
-    from doppel_spark.operators.stage import StageMaterializer
-
-    mat = StageMaterializer.for_input(df, prefix="tokbudget")
-    atexit.register(mat.cleanup)
+    # corpus would be scanned (and tokenized) twice. ~24-byte rows
     slim = mat.cut(slim, "budget_slim")
 
     # per-block token totals: `blocks` rows to the driver, never data

@@ -32,10 +32,14 @@ driver path is not a union-find: union-find reaches the fixed point in
 one pass, so it could neither fail at ``max_iter`` nor return the
 same partial labels.
 
+The caller owns the materializer: it builds the
+:class:`~doppel_spark.operators.stage.StageMaterializer`, passes it as
+``mat`` and calls its ``cleanup()`` once the result is consumed; this
+module never builds one.
+
 Spark execution, scale hygiene:
-* Every round is cut through the shared
-  :class:`~doppel_spark.operators.stage.StageMaterializer`'s
-  ``cut_iter`` — the iteration-aware cut. Without any cut the logical
+* Every round is cut through the caller's materializer's ``cut_iter``
+  — the iteration-aware cut. Without any cut the logical
   plan doubles per round and the driver dies on plan explosion long
   before data size matters; with a plain data cut (``persist``) the
   plan STILL doubles and analyzer time explodes (measured: 0.6 → 22.7 s
@@ -209,7 +213,8 @@ def connected_components(
     dst: str = "url_b",
     max_iter: int = 25,
     strict: bool = True,
-    mat: StageMaterializer | None = None,
+    *,
+    mat: StageMaterializer,
 ) -> DataFrame:
     """Components of the undirected graph given by ``edges``.
 
@@ -217,10 +222,11 @@ def connected_components(
     the node type; every node appearing in any edge gets a row.
     Deterministic: the cluster representative is the smallest member.
 
-    ``mat`` — the caller's pipeline-scoped materializer (the near-dup
-    pipeline passes its own, so CC rounds inherit the size-appropriate
-    strategy picked for the whole run); ad-hoc callers get a one-off
-    size-aware materializer over the edge list.
+    ``mat`` — the caller's materializer: it picks the execution (below)
+    and owns every round's cut, so the caller frees them with
+    ``mat.cleanup()`` once the returned frame is consumed (the near-dup
+    pipeline passes its own, so CC rounds inherit the strategy picked
+    for the whole run).
 
     In a persist-mode run an edge list of at most :data:`BOUND` rows is
     collected once and the rounds run on the driver; otherwise every
@@ -231,18 +237,6 @@ def connected_components(
     **raises** :class:`ComponentsNotConverged` by default; with
     ``strict=False`` it warns and returns the partial labels instead.
     """
-    if mat is None:
-        mat = StageMaterializer.for_input(edges, prefix="cc")
-        # Ad-hoc path: nothing outside this function can reach the
-        # one-off materializer, so in table mode the final round's
-        # scratch parquet (which BACKS the returned labels frame — it
-        # must not be deleted here) would otherwise outlive the process
-        # even under a remote spark.doppel.scratchDir (ADVICE r4).
-        # Register its cleanup at interpreter exit; callers wanting
-        # earlier reclamation pass their own pipeline-scoped `mat`.
-        import atexit
-
-        atexit.register(mat.cleanup)
     found = (_driver_labels(edges, src, dst, max_iter)
              if mat.mode == "persist" else None)
     labels, converged = found or _spark_labels(edges, src, dst, max_iter, mat)

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from doppel_spark.operators.stage import StageMaterializer
+
 #: the engine-wide six-byte ASCII-whitespace class (== minhash._WS_RE)
 WS_CLASS = "[ \t\n\x0b\x0c\r]+"
 
@@ -177,7 +179,7 @@ def contamination_report(corpus: DataFrame, eval_df: DataFrame,
 def fuzzy_contamination_pairs(
     corpus: DataFrame, eval_df: DataFrame, cfg=None,
     id_col: str = "doc_id", eval_id_col: str = "eval_id",
-    text_col: str = "text",
+    text_col: str = "text", *, mat: StageMaterializer,
 ) -> DataFrame:
     """Near-duplicate contamination: (corpus id, eval id, jaccard_est)
     for every corpus document whose shingle-set Jaccard against an eval
@@ -205,6 +207,10 @@ def fuzzy_contamination_pairs(
     boilerplate between corpus and eval inflates candidates but never
     output (verification drops sub-threshold pairs).
 
+    ``mat`` — the caller's materializer, sized over both ``(id, text)``
+    sides; it cuts the signed sides, and the caller frees it with
+    ``mat.cleanup()`` once the pairs are consumed.
+
     Reference tie: same cross-set membership reading of doppel's digest
     groupBy as :func:`contamination_report`
     (/root/reference/internal/finder/finder.go:84-143), with MinHash
@@ -217,7 +223,7 @@ def fuzzy_contamination_pairs(
     corp_sig, eval_sig = _cut_signatures(
         [corpus.select(F.col(id_col), F.col(text_col)),
          eval_df.select(F.col(eval_id_col), F.col(text_col))],
-        cfg, text_col, "fuzzycontam")
+        cfg, text_col, mat=mat)
     return _cross_pairs(corp_sig, eval_sig, id_col, eval_id_col, cfg,
                         broadcast_right=True)
 
@@ -225,15 +231,16 @@ def fuzzy_contamination_pairs(
 def fuzzy_decontaminate(
     corpus: DataFrame, eval_df: DataFrame, cfg=None,
     id_col: str = "doc_id", eval_id_col: str = "eval_id",
-    text_col: str = "text",
+    text_col: str = "text", *, mat: StageMaterializer,
 ) -> DataFrame:
     """Corpus minus every document near-duplicating an eval document —
     the fuzzy twin of :func:`decontaminate`. Flagged ids (a trickle)
-    anti-join back on the id; the corpus scans once."""
+    anti-join back on the id; the corpus scans once. ``mat`` as in
+    :func:`fuzzy_contamination_pairs`."""
     flagged = (
         fuzzy_contamination_pairs(
             corpus, eval_df, cfg=cfg, id_col=id_col,
-            eval_id_col=eval_id_col, text_col=text_col)
+            eval_id_col=eval_id_col, text_col=text_col, mat=mat)
         .select(id_col).distinct()
     )
     return corpus.join(flagged, id_col, "left_anti")

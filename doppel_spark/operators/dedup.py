@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from doppel_spark.config import NearDupConfig
 from doppel_spark.functions.digests import full_digest
 from doppel_spark.operators.lsh import _cross_pairs, _cut_signatures
+from doppel_spark.operators.stage import StageMaterializer
 
 
 def _digest_or_sentinel(text_col: str, id_col: str):
@@ -147,7 +148,7 @@ def cross_snapshot_new(incoming: DataFrame, seen: DataFrame,
 def cross_snapshot_neardup_pairs(
     incoming: DataFrame, seen: DataFrame, cfg: NearDupConfig | None = None,
     id_col: str = "url", text_col: str = "text",
-    seen_signed: bool = False,
+    seen_signed: bool = False, *, mat: StageMaterializer,
 ) -> DataFrame:
     """(``{id}_new``, ``{id}_seen``, jaccard_est) for incoming docs that
     near-duplicate prior-snapshot content — :func:`cross_snapshot_new`
@@ -173,6 +174,11 @@ def cross_snapshot_neardup_pairs(
     appended to Iceberg each snapshot), and only the incoming snapshot
     pays the signature stage.
 
+    ``mat`` — the caller's materializer, sized over both ``(id, text)``
+    sides (the incoming side alone with ``seen_signed``); it cuts the
+    signed sides, and the caller frees it with ``mat.cleanup()`` once
+    the pairs are consumed.
+
     Reference tie: the cross-*run* reading of doppel's "skip files
     already in a known group" early exit
     (/root/reference/internal/scanner/finder.go:84-96), at near-dup
@@ -182,14 +188,14 @@ def cross_snapshot_neardup_pairs(
     new_id, seen_id = f"{id_col}_new", f"{id_col}_seen"
     inc_in = incoming.select(F.col(id_col).alias(new_id), F.col(text_col))
     if seen_signed:
-        (inc_sig,) = _cut_signatures([inc_in], cfg, text_col, "xsnapnd")
+        (inc_sig,) = _cut_signatures([inc_in], cfg, text_col, mat=mat)
         seen_sig = seen.select(F.col(id_col).alias(seen_id),
                                "signature", "band_hashes")
     else:
         inc_sig, seen_sig = _cut_signatures(
             [inc_in, seen.select(F.col(id_col).alias(seen_id),
                                  F.col(text_col))],
-            cfg, text_col, "xsnapnd")
+            cfg, text_col, mat=mat)
     return _cross_pairs(inc_sig, seen_sig, new_id, seen_id, cfg,
                         broadcast_right=False)
 

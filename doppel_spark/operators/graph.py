@@ -63,7 +63,8 @@ def host_rank(
     damping_den: int = 100,
     scale: int = RANK_SCALE,
     n_nodes: int | None = None,
-    mat: StageMaterializer | None = None,
+    *,
+    mat: StageMaterializer,
 ) -> DataFrame:
     """Integer PageRank over ``edges``; returns (host, rank_micros).
 
@@ -76,6 +77,10 @@ def host_rank(
     already knows the host count (a table property in production, same
     contract as IVF's centroid calibration, similarity.py).
 
+    ``mat`` — the caller's materializer; it owns the edge and
+    final-round cuts, which the caller frees with ``mat.cleanup()``
+    once the returned frame is consumed.
+
     Scale shape: the weighted edge table is cut ONCE (with its
     per-source out-weight already joined on) and re-read every round;
     per-round traffic is the (node, score) frame — hosts are ~10⁴×
@@ -86,11 +91,6 @@ def host_rank(
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if mat is None:
-        mat = StageMaterializer.for_input(edges, prefix="rank")
-        import atexit
-
-        atexit.register(mat.cleanup)  # ad-hoc contract, see components.py
 
     w_expr = F.col(weight) if weight is not None else F.lit(1)
     ew = (edges.groupBy(F.col(src).alias("src"), F.col(dst).alias("dst"))

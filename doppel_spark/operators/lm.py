@@ -38,11 +38,6 @@ Scale notes (100 TB):
   both move one row per *distinct* token per document. The LM table
   joins on the token equi-key — AQE broadcasts it when the vocabulary
   fits, sort-merge otherwise; never a cartesian.
-* **One tokenization pass**: the LM's global counts derive from the
-  same (doc, token, count) frame the scoring join consumes; pass a
-  :class:`~doppel_spark.operators.stage.StageMaterializer` as ``mat``
-  to cut that frame (and the score frame in :func:`ccnet_buckets`) so
-  multi-consumer subtrees materialize once instead of recomputing.
 * **Tercile cutoffs** (:func:`tercile_thresholds`): the score
   distribution is reduced to a ``(score, count)`` histogram first;
   the cumulative window then runs over *distinct integer scores* —
@@ -59,7 +54,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from doppel_spark.functions.text import tokens
-from doppel_spark.operators.stage import StageMaterializer
 
 #: log-probabilities are snapped to integer micro-nats at this scale
 LPM_SCALE = 1_000_000
@@ -91,8 +85,8 @@ def _lm_from_counts(per_tok: DataFrame) -> DataFrame:
     )
 
 
-def doc_xent(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-             mat: StageMaterializer | None = None) -> DataFrame:
+def doc_xent(df: DataFrame, id_col: str = "doc_id",
+             text_col: str = "text") -> DataFrame:
     """Per-document unigram cross-entropy in integer micro-nats.
 
     Returns ``(id, n_tokens, sum_lpm, xent_micros)`` where
@@ -101,16 +95,8 @@ def doc_xent(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     itself. Token-less documents are KEPT with ``n_tokens = 0``,
     ``sum_lpm = 0`` and a NULL score (they carry no evidence either
     way; downstream bucketing skips NULLs).
-
-    Self-training consumes the (doc, token, count) frame twice (LM
-    rollup + scoring join). Pass ``mat`` to cut it once
-    (:class:`StageMaterializer`) — at scale that halves tokenization
-    work; without it the recompute is a second scan, correct either
-    way.
     """
     per_tok = _per_doc_token_counts(df, id_col, text_col)
-    if mat is not None:
-        per_tok = mat.cut(per_tok, "lm_per_tok")
     lm = _lm_from_counts(per_tok)
     per_doc = (per_tok.join(lm.select("token", "lpm"), "token")
                .groupBy(id_col)
@@ -168,24 +154,15 @@ def bucket_label(score: Column | str, t1: Column, t2: Column) -> Column:
 
 
 def ccnet_buckets(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  mat: StageMaterializer | None = None) -> DataFrame:
+                  text_col: str = "text") -> DataFrame:
     """Score ``df`` and label every document head/middle/tail.
 
     Returns ``(id, n_tokens, xent_micros, bucket)``. Head = lowest
     cross-entropy (the model's most predictable documents — in CCNet's
     usage, the cleanest text). Thresholds join in as a broadcast 1-row
     frame; the labeling itself is per-row, zero shuffle.
-
-    The score frame feeds both the threshold computation and the
-    labeled output; pass ``mat`` to cut it (and the token counts
-    inside :func:`doc_xent`) so the corpus is scanned and tokenized
-    exactly once at scale. Without ``mat`` Catalyst recomputes the
-    scoring chain per consumer — correct, and fine at bench scale.
     """
-    scores = doc_xent(df, id_col=id_col, text_col=text_col, mat=mat)
-    if mat is not None:
-        scores = mat.cut(scores, "lm_scores")
+    scores = doc_xent(df, id_col=id_col, text_col=text_col)
     th = tercile_thresholds(scores)
     return (
         scores.crossJoin(F.broadcast(th))

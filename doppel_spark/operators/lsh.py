@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from doppel_spark.config import NearDupConfig
 from doppel_spark.functions.minhash import exact_jaccard_udf, signature_agreement
+from doppel_spark.operators.stage import StageMaterializer
 
 
 def signature_stage(df: DataFrame, cfg: NearDupConfig, id_col: str = "url",
@@ -175,24 +176,20 @@ def pairs_from_membership(
 
 def pairs_from_buckets(
     exploded: DataFrame, key_cols: list[str], id_col: str = "url",
-    bucket_cap: int = 256, mat: "StageMaterializer | None" = None,
+    bucket_cap: int = 256, *, mat: StageMaterializer,
 ) -> DataFrame:
     """Distinct unordered candidate pairs straight from exploded band
     keys — ``bucket_membership`` + ``pairs_from_membership`` with the
     membership stage **materialized between them** (it feeds three
     consumers inside pair generation; un-cut, the whole subtree above —
     including any fingerprint/banding UDF — re-executes per consumer,
-    the round-2 bench's 2-6× recompute bug). Callers with a
-    pipeline-scoped :class:`~doppel_spark.operators.stage.
-    StageMaterializer` pass it as ``mat``; otherwise a size-aware
-    one-off cut is taken here. Note the subtree above ``exploded`` is
+    the round-2 bench's 2-6× recompute bug). The cut goes through the
+    caller's :class:`~doppel_spark.operators.stage.StageMaterializer`
+    ``mat``, which the caller frees with ``mat.cleanup()`` once the
+    pairs are consumed. Note the subtree above ``exploded`` is
     still evaluated twice while *building* the membership table
     (bucket stats + join-back), so callers should cut their UDF stage
     first — see ``substring_dup_pairs`` / ``embedding_neardup_pairs``."""
-    from doppel_spark.operators.stage import StageMaterializer
-
-    if mat is None:
-        mat = StageMaterializer.for_input(exploded, prefix="lsh")
     memb = mat.cut(bucket_membership(exploded, key_cols, id_col=id_col), "memb")
     return pairs_from_membership(
         memb, key_cols, id_col=id_col, bucket_cap=bucket_cap)
@@ -252,17 +249,12 @@ def verify_pairs(
 
 
 def _cut_signatures(sides: list[DataFrame], cfg: NearDupConfig,
-                    text_col: str, prefix: str) -> list[DataFrame]:
+                    text_col: str, *,
+                    mat: StageMaterializer) -> list[DataFrame]:
     """:func:`signature_stage` of each ``(id, text)`` frame, cut once
-    (each signed side feeds banding AND verification). One
-    materializer decides from every side's size; its caches live until
-    the process exits, since the returned frames read them."""
-    import atexit
-
-    from doppel_spark.operators.stage import StageMaterializer
-
-    mat = StageMaterializer.for_input(*sides, prefix=prefix)
-    atexit.register(mat.cleanup)
+    through the caller's ``mat`` (each signed side feeds banding AND
+    verification). The caller sizes ``mat`` over every side and frees
+    it once the frames built on these cuts are consumed."""
     return [mat.cut(signature_stage(df, cfg, id_col=df.columns[0],
                                     text_col=text_col), f"sig{i}")
             for i, df in enumerate(sides)]

@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from doppel_spark.operators.stage import StageMaterializer
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -342,7 +344,7 @@ def embedding_neardup_pairs(
     bands: int = 16, rows_per_band: int = 16, seed: int = 42,
     bucket_cap: int = 256, brute_force: bool = False,
     dim: int | None = None,
-    mat=None,
+    mat: StageMaterializer | None = None,
 ) -> DataFrame:
     """Pairs of vectors with cosine ≥ threshold (id_a < id_b, sim).
 
@@ -355,9 +357,11 @@ def embedding_neardup_pairs(
     is 1−(1−p^r)^b with p = 1−θ/π; at cosine 0.95 the default 16×16
     catches a pair with P ≈ 0.96 (24 bands → 0.99).
 
-    ``mat`` — optional caller-owned :class:`StageMaterializer` so a
-    composing pipeline (``semantic_dedup``) shares one cut strategy
-    and one cleanup scope across this stage and its own.
+    ``mat`` — the caller's :class:`~doppel_spark.operators.stage
+    .StageMaterializer`, required on the LSH path (like ``dim``; the
+    brute-force path cuts nothing). It owns the band-key, membership
+    and candidate cuts, which the caller frees with ``mat.cleanup()``
+    once the returned frame is consumed.
     """
     base = emb.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("vec"))
     if brute_force:
@@ -370,13 +374,16 @@ def embedding_neardup_pairs(
             .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
         )
     from doppel_spark.operators.lsh import pairs_from_buckets
-    from doppel_spark.operators.stage import StageMaterializer
 
     if dim is None:
         raise ValueError(
             "embedding_neardup_pairs (LSH path) requires dim (embedding "
             "width): inferring it would run a driver-side .first() at "
             "plan build")
+    if mat is None:
+        raise ValueError(
+            "embedding_neardup_pairs (LSH path) requires mat: the caller "
+            "owns the materializer that cuts its stages")
     planes = hyperplanes(dim, bands * rows_per_band, seed)
     keys = sign_band_keys_udf(planes, bands, rows_per_band)
     # Cut BELOW the banding UDF (id + band keys only — the vectors stay
@@ -385,8 +392,6 @@ def embedding_neardup_pairs(
     # join). Round 2 persisted only ``cand``, ABOVE the un-materialized
     # membership subtree, so the UDF + bucket shuffles still re-ran
     # 2-6× inside cand's first evaluation — 26.5 s for 5 k vectors.
-    if mat is None:
-        mat = StageMaterializer.for_input(base, prefix="emblsh")
     # force=False: the membership cut inside pairs_from_buckets is the
     # next blocking action and its bucket-stats aggregation scans every
     # partition of this frame, filling the cache in that same job — the
@@ -420,6 +425,8 @@ def semantic_dedup(
     bands: int = 16, rows_per_band: int = 16, seed: int = 42,
     bucket_cap: int = 256, brute_force: bool = False,
     dim: int | None = None,
+    *,
+    mat: StageMaterializer,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup: cluster vectors whose cosine ≥
     ``threshold`` and elect one keeper per cluster.
@@ -440,24 +447,15 @@ def semantic_dedup(
 
     Scale shape: pairs come from the capped equi-join blocking of
     :func:`embedding_neardup_pairs` (never all-pairs), components from
-    plan-truncated label-propagation rounds; one materializer scopes
-    both stages, so the LSH cuts and the CC round tables share a
-    strategy and a cleanup.
+    plan-truncated label-propagation rounds; the caller's ``mat`` cuts
+    both stages, so the LSH cuts and the CC rounds share a strategy,
+    and the caller frees them with ``mat.cleanup()`` once the result
+    is consumed.
     """
     from doppel_spark.operators.components import (
         clusters_with_singletons, connected_components)
-    from doppel_spark.operators.stage import StageMaterializer
 
     base = emb.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("vec"))
-    mat = None
-    if not brute_force:
-        mat = StageMaterializer.for_input(base, prefix="semdedup")
-        import atexit
-
-        # ad-hoc scope (same reasoning as connected_components): in
-        # table mode the final labels frame is BACKED by scratch, so
-        # reclamation must wait for interpreter exit
-        atexit.register(mat.cleanup)
     pairs = embedding_neardup_pairs(
         base, threshold=threshold, id_col="id", vec_col="vec",
         bands=bands, rows_per_band=rows_per_band, seed=seed,

@@ -71,10 +71,17 @@ session meanwhile: two pipelines sharing one session from two threads
 are unsupported (the second could plan statically, or restore AQE
 under the first).
 
-Lifetime: scratch tables live under a per-session temp dir reclaimed at
-process exit; ``cleanup()`` reclaims a materializer's tables/caches
-early. In persist mode the caches stay referenced by the returned
-DataFrames, so ``cleanup()`` must only run after consumers finish.
+Lifetime: the caller owns the materializer. A library operator that
+cuts takes the caller's ``mat`` and never builds or frees one; the
+caller builds it with :meth:`StageMaterializer.for_input` over the
+frames the operator cuts, and calls ``cleanup()`` once every frame
+read from its cuts is consumed (a job stage: after ``store.run`` has
+written and re-read it; ``near_dup_pipeline``: ``NearDupResult
+.cleanup()``). In persist mode the caches stay referenced by the
+returned DataFrames, so ``cleanup()`` must only run after consumers
+finish. An entry query's frames live for the process instead: its
+caches die with the JVM, and its scratch tables with the per-session
+temp dir, which this module's one ``atexit`` hook removes.
 """
 
 from __future__ import annotations
@@ -336,15 +343,15 @@ class StageMaterializer:
                           f"table {path}: {exc}", RuntimeWarning, stacklevel=2)
 
     def cleanup(self) -> None:
-        """Reclaim caches/tables. Only safe after consumers finish.
+        """Reclaim caches/tables. Only safe after consumers finish;
+        the caller that built this materializer calls it.
 
-        Tolerates a stopped SparkContext: ad-hoc materializers register
-        this via ``atexit``, which can fire after ``spark.stop()`` —
-        ``unpersist`` on a dead context raises from the JVM (the block
-        manager endpoint is gone), and the cached data died with the
-        context anyway. Scratch-table deletion is context-free
-        (``shutil``) for local paths and already exception-guarded for
-        remote ones, so it still runs."""
+        Tolerates a stopped SparkContext: a result's ``cleanup()`` can
+        run after ``spark.stop()`` — ``unpersist`` on a dead context
+        raises from the JVM (the block manager endpoint is gone), and
+        the cached data died with the context anyway. Scratch-table
+        deletion is context-free (``shutil``) for local paths and
+        already exception-guarded for remote ones, so it still runs."""
         for df in self.cached:
             try:
                 df.unpersist()

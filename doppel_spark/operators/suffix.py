@@ -130,18 +130,17 @@ def lcs_len_udf():
 def fingerprint_candidates(
     docs: DataFrame, id_col: str = "url", text_col: str = "text",
     k: int = 64, window: int = 64, bucket_cap: int = 256,
-    mat: StageMaterializer | None = None,
+    *, mat: StageMaterializer,
 ) -> DataFrame:
     """Pairs sharing ≥1 winnowed fingerprint (url_a < url_b).
 
     The winnowing UDF's output is cut BEFORE the bucket machinery:
     bucket membership alone evaluates its input twice (stats + join
     back), and without the cut the UDF re-ran per evaluation — the
-    round-2 bench's 3× ``substring_pairs`` regression.
+    round-2 bench's 3× ``substring_pairs`` regression. Both cuts go
+    through the caller's ``mat``, which the caller frees with
+    ``mat.cleanup()`` once the pairs are consumed.
     """
-    if mat is None:
-        mat = StageMaterializer.for_input(docs.select(id_col, text_col),
-                                          prefix="suffix")
     fp = fingerprint_udf(k, window)
     # force=False: the membership cut inside pairs_from_buckets is the
     # next blocking action and scans every partition of this frame,
@@ -157,15 +156,15 @@ def fingerprint_candidates(
 def substring_dup_pairs(
     docs: DataFrame, id_col: str = "url", text_col: str = "text",
     min_len: int = 256, k: int = 64, window: int = 64, bucket_cap: int = 256,
+    *, mat: StageMaterializer,
 ) -> DataFrame:
     """Pairs of docs sharing a verbatim substring of ≥ ``min_len`` chars.
 
     Output: (url_a, url_b, lcs_len long). Complete for min_len ≥
     window + k − 1 (the winnowing guarantee); candidates below that
-    floor may be missed by design.
+    floor may be missed by design. ``mat`` — the caller's
+    materializer, freed by the caller once the result is consumed.
     """
-    mat = StageMaterializer.for_input(docs.select(id_col, text_col),
-                                      prefix="suffix")
     pairs = mat.cut(
         fingerprint_candidates(docs, id_col, text_col, k, window, bucket_cap,
                                mat=mat), "cand_pairs")

@@ -176,6 +176,7 @@ def main(argv: list[str] | None = None) -> dict:
     from doppel_spark.operators.dedup import exact_dedup
     from doppel_spark.operators.lines import gopher_quality_filter, line_dedup
     from doppel_spark.operators.quota import cap_per_host
+    from doppel_spark.operators.stage import StageMaterializer
     from doppel_spark.session import get_spark, ship_package
     from doppel_spark.sources import read_pages
 
@@ -326,15 +327,21 @@ def main(argv: list[str] | None = None) -> dict:
         from doppel_spark.functions.urls import host_of
         from doppel_spark.operators.graph import host_rank
 
+        edges = host_edges(pages_with_html)
+        mat = StageMaterializer.for_input(edges, prefix="rank")
+
         def low_hosts() -> DataFrame:
-            ranks = host_rank(host_edges(pages_with_html), weight="w",
-                              iterations=args.host_rank_iterations)
+            ranks = host_rank(edges, weight="w",
+                              iterations=args.host_rank_iterations, mat=mat)
             return (ranks
                     .filter(F.col("rank_micros")
                             < args.min_host_rank_micros)
                     .select("host"))
 
-        low = store.run("s01d_low_rank_hosts", low_hosts)
+        try:
+            low = store.run("s01d_low_rank_hosts", low_hosts)
+        finally:
+            mat.cleanup()  # the stage is re-read from parquet
         low_rank_hosts = low.count()
         cur = store.run("s01e_host_ranked", lambda: cur.join(
             F.broadcast(low), host_of(F.col("url")) == F.col("host"),
@@ -432,14 +439,19 @@ def main(argv: list[str] | None = None) -> dict:
             # token in a paraphrased leak breaks every covering 13-gram
             # (the exact stage above misses it) but barely moves the
             # shingle-set Jaccard — near-dups of eval docs go too
-            def fuzzy(df: DataFrame) -> DataFrame:
-                from doppel_spark.operators.contamination import (
-                    fuzzy_decontaminate)
-                eval_df = (spark.read.parquet(*args.eval)
-                           .withColumn("eval_id",
-                                       F.monotonically_increasing_id()))
-                return fuzzy_decontaminate(df, eval_df, id_col="url")
-            cur = store.run("s08b_fuzzy_decontaminated", lambda: fuzzy(cur))
+            from doppel_spark.operators.contamination import (
+                fuzzy_decontaminate)
+            eval_df = (spark.read.parquet(*args.eval)
+                       .withColumn("eval_id", F.monotonically_increasing_id()))
+            mat = StageMaterializer.for_input(
+                cur.select("url", "text"), eval_df.select("eval_id", "text"),
+                prefix="fuzzycontam")
+            try:
+                cur = store.run("s08b_fuzzy_decontaminated",
+                                lambda: fuzzy_decontaminate(
+                                    cur, eval_df, id_col="url", mat=mat))
+            finally:
+                mat.cleanup()
 
     if args.max_per_host:
         cur = store.run("s09_host_capped",
@@ -461,8 +473,13 @@ def main(argv: list[str] | None = None) -> dict:
 
     train = cur.filter(F.col("split") == "train").drop("split")
     if args.token_budget:
-        train = store.run("s11_train_token_cut", lambda: token_budget_sample(
-            train, args.token_budget, token_count("text"), id_col="url"))
+        mat = StageMaterializer.for_input(train, prefix="tokbudget")
+        try:
+            train = store.run("s11_train_token_cut", lambda: token_budget_sample(
+                train, args.token_budget, token_count("text"), id_col="url",
+                mat=mat))
+        finally:
+            mat.cleanup()
 
     shards_path = os.path.join(args.output, "train_shards")
     write_training_shards(train, shards_path, args.shards, key_col="url")

@@ -8,6 +8,7 @@ import pytest
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
+from doppel_spark.operators.stage import StageMaterializer  # noqa: E402
 from doppel_spark.session import get_spark  # noqa: E402
 
 
@@ -16,6 +17,22 @@ def spark():
     s = get_spark(app_name="doppel_spark_tests", master="local[4]",
                   shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture()
+def new_mat(spark):
+    """Factory of persist materializers (the policy ``for_input`` picks
+    at test scale) for operators that cut through the caller's ``mat``;
+    every one is freed when the test ends."""
+    made = []
+
+    def make(prefix: str = "test") -> StageMaterializer:
+        made.append(StageMaterializer(spark, mode="persist", prefix=prefix))
+        return made[-1]
+
+    yield make
+    for mat in made:
+        mat.cleanup()
 
 
 @pytest.fixture()

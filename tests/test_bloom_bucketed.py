@@ -78,19 +78,20 @@ def _snapshots(spark):
     return incoming, seen
 
 
-def test_cross_snapshot_new_bloom_matches_exact(spark):
+def test_cross_snapshot_new_bloom_matches_exact(spark, new_mat):
     incoming, seen = _snapshots(spark)
     base = sorted(r.doc_id for r in
                   cross_snapshot_new(incoming, seen, id_col="doc_id").collect())
     got = sorted(r.doc_id for r in
-                 cross_snapshot_new_bloom(incoming, seen,
-                                          id_col="doc_id").collect())
+                 cross_snapshot_new_bloom(incoming, seen, id_col="doc_id",
+                                          mat=new_mat()).collect())
     assert got == base
     assert all(d >= 200 for d in got)  # every refetch dropped
     assert {901, 902} <= set(got)      # null text is always new
 
 
-def test_cross_snapshot_new_bloom_fp_heavy_filter_still_exact(spark):
+def test_cross_snapshot_new_bloom_fp_heavy_filter_still_exact(spark,
+                                                              new_mat):
     """A deliberately tiny bloom (massive FPR) must not change the
     result — false positives only route rows to the exact join."""
     incoming, seen = _snapshots(spark)
@@ -98,14 +99,16 @@ def test_cross_snapshot_new_bloom_fp_heavy_filter_still_exact(spark):
                   cross_snapshot_new(incoming, seen, id_col="doc_id").collect())
     got = sorted(r.doc_id for r in
                  cross_snapshot_new_bloom(incoming, seen, id_col="doc_id",
-                                          n_bits=64, n_hashes=1).collect())
+                                          n_bits=64, n_hashes=1,
+                                          mat=new_mat()).collect())
     assert got == base
 
 
-def test_bloom_plan_is_arrow_vectorized(spark):
+def test_bloom_plan_is_arrow_vectorized(spark, new_mat):
     """The membership test must be ArrowEvalPython, never BatchEvalPython."""
     incoming, seen = _snapshots(spark)
-    out = cross_snapshot_new_bloom(incoming, seen, id_col="doc_id")
+    out = cross_snapshot_new_bloom(incoming, seen, id_col="doc_id",
+                                   mat=new_mat())
     plan = physical_plan(out)
     assert "BatchEvalPython" not in plan
 

@@ -41,47 +41,51 @@ def _expected_prefix(budget: int) -> set[int]:
 
 
 @pytest.mark.parametrize("blocks", [1, 4, 1024])
-def test_exact_prefix_semantics(spark, corpus, blocks):
+def test_exact_prefix_semantics(spark, corpus, blocks, new_mat):
     for budget in (0, 1, 57, 100, 209):
         got = {
             r["doc_id"]
             for r in token_budget_sample(
-                corpus, budget, token_count("text"), blocks=blocks
-            ).collect()
+                corpus, budget, token_count("text"), blocks=blocks,
+                mat=new_mat()).collect()
         }
         assert got == _expected_prefix(budget), (budget, blocks)
 
 
-def test_budget_covers_everything(spark, corpus):
-    got = token_budget_sample(corpus, 210, token_count("text")).collect()
+def test_budget_covers_everything(spark, corpus, new_mat):
+    got = token_budget_sample(corpus, 210, token_count("text"),
+                              mat=new_mat()).collect()
     assert len(got) == 20  # whole corpus fits exactly
     assert set(got[0].asDict()) == {"doc_id", "text"}  # full width
 
 
-def test_deterministic_under_repartition(spark, corpus):
+def test_deterministic_under_repartition(spark, corpus, new_mat):
     a = sorted(r["doc_id"] for r in token_budget_sample(
-        corpus, 100, token_count("text")).collect())
+        corpus, 100, token_count("text"), mat=new_mat()).collect())
     b = sorted(r["doc_id"] for r in token_budget_sample(
-        corpus.repartition(7), 100, token_count("text")).collect())
+        corpus.repartition(7), 100, token_count("text"),
+        mat=new_mat()).collect())
     assert a == b
 
 
-def test_null_tokens_count_zero(spark):
+def test_null_tokens_count_zero(spark, new_mat):
     df = spark.createDataFrame(
         [(1, None), (2, "a b")], "doc_id long, text string")
     # budget 0: the null-text doc (0 tokens) survives iff it precedes
     # the 2-token doc in bucket order AND contributes 0 to the cumsum
     got = {r["doc_id"] for r in
-           token_budget_sample(df, 0, token_count("text")).collect()}
+           token_budget_sample(df, 0, token_count("text"),
+                               mat=new_mat()).collect()}
     expect = {1} if (_bucket(1), 1) < (_bucket(2), 2) else set()
     assert got == expect
 
 
-def test_budget_validation(spark, corpus):
+def test_budget_validation(spark, corpus, new_mat):
     with pytest.raises(ValueError):
-        token_budget_sample(corpus, -1, token_count("text"))
+        token_budget_sample(corpus, -1, token_count("text"), mat=new_mat())
     with pytest.raises(ValueError):
-        token_budget_sample(corpus, 5, token_count("text"), blocks=0)
+        token_budget_sample(corpus, 5, token_count("text"), blocks=0,
+                            mat=new_mat())
 
 
 @pytest.fixture()

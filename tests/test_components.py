@@ -19,16 +19,27 @@ from doppel_spark.operators.components import (
 from doppel_spark.operators.stage import StageMaterializer
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+def _mat(edges):
+    return StageMaterializer.for_input(edges, prefix="cc")
+
+
+def _rows(edges, **kw):
+    """Sorted rows of ``connected_components(edges, **kw)``, cut through
+    a materializer freed afterwards."""
+    mat = _mat(edges)
+    try:
+        return sorted(tuple(r) for r in connected_components(
+            edges, mat=mat, **kw).collect())
+    finally:
+        mat.cleanup()
 
 
 def _both(monkeypatch, edges, **kw):
     """(driver rows, Spark rows) of ``connected_components(edges, **kw)``."""
-    driver = _rows(connected_components(edges, **kw))
+    driver = _rows(edges, **kw)
     with monkeypatch.context() as m:
         m.setattr(components, "BOUND", 0)
-        spark_rows = _rows(connected_components(edges, **kw))
+        spark_rows = _rows(edges, **kw)
     return driver, spark_rows
 
 
@@ -57,8 +68,10 @@ def test_driver_and_spark_components_agree(spark, monkeypatch, typ, seed):
     # and the frames carry the same schema
     with monkeypatch.context() as m:
         m.setattr(components, "BOUND", 0)
-        spark_schema = connected_components(edges, max_iter=100).schema
-    assert connected_components(edges, max_iter=100).schema == spark_schema
+        spark_schema = connected_components(
+            edges, max_iter=100, mat=_mat(edges)).schema
+    assert connected_components(
+        edges, max_iter=100, mat=_mat(edges)).schema == spark_schema
 
 
 def test_driver_and_spark_partial_labels_agree(spark, monkeypatch):
@@ -70,7 +83,7 @@ def test_driver_and_spark_partial_labels_agree(spark, monkeypatch):
         with monkeypatch.context() as m:
             m.setattr(components, "BOUND", bound)
             with pytest.raises(ComponentsNotConverged):
-                connected_components(edges, max_iter=1)
+                connected_components(edges, max_iter=1, mat=_mat(edges))
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         driver, spark_rows = _both(monkeypatch, edges, max_iter=1, strict=False)
@@ -94,10 +107,10 @@ def test_graph_over_bound_takes_label_propagation(spark, monkeypatch):
 
     monkeypatch.setattr(StageMaterializer, "cut_iter", spy)
     monkeypatch.setattr(components, "BOUND", len(edges_rows))
-    at_bound = _rows(connected_components(edges))
+    at_bound = _rows(edges)
     assert calls == []
     monkeypatch.setattr(components, "BOUND", len(edges_rows) - 1)
-    over = _rows(connected_components(edges))
+    over = _rows(edges)
     assert "cc_sym" in calls and "cc_labels0" in calls
     assert at_bound == over
     assert {(u, rep) for u, rep, _ in over} == {

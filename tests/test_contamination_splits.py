@@ -170,28 +170,31 @@ def _fuzzy_fixtures(spark):
     return corpus, evl
 
 
-def test_fuzzy_contamination_pairs_planted(spark):
+def test_fuzzy_contamination_pairs_planted(spark, new_mat):
     corpus, evl = _fuzzy_fixtures(spark)
     got = sorted(
         (r["doc_id"], r["eval_id"], r["jaccard_est"])
-        for r in fuzzy_contamination_pairs(corpus, evl).collect())
+        for r in fuzzy_contamination_pairs(corpus, evl,
+                                           mat=new_mat()).collect())
     assert got == [("c0", "e0", 1.0), ("c1", "e1", 1.0), ("c2", "e2", 1.0)]
 
 
-def test_fuzzy_decontaminate_drops_only_flagged(spark):
+def test_fuzzy_decontaminate_drops_only_flagged(spark, new_mat):
     corpus, evl = _fuzzy_fixtures(spark)
-    kept = sorted(r["doc_id"]
-                  for r in fuzzy_decontaminate(corpus, evl).collect())
+    kept_df = fuzzy_decontaminate(corpus, evl, mat=new_mat())
+    kept = sorted(r["doc_id"] for r in kept_df.collect())
     assert kept == ["c3", "c4", "c5"]
     # full-width rows survive
-    assert set(fuzzy_decontaminate(corpus, evl).columns) == {"doc_id", "text"}
+    assert set(kept_df.columns) == {"doc_id", "text"}
 
 
-def test_fuzzy_contamination_empty_eval(spark):
+def test_fuzzy_contamination_empty_eval(spark, new_mat):
     corpus, _ = _fuzzy_fixtures(spark)
     empty = spark.createDataFrame([], "eval_id string, text string")
-    assert fuzzy_contamination_pairs(corpus, empty).count() == 0
-    assert fuzzy_decontaminate(corpus, empty).count() == corpus.count()
+    assert fuzzy_contamination_pairs(corpus, empty,
+                                     mat=new_mat()).count() == 0
+    assert fuzzy_decontaminate(corpus, empty,
+                               mat=new_mat()).count() == corpus.count()
 
 
 def test_assign_shards_deterministic_and_in_range(spark):

@@ -72,19 +72,21 @@ def test_spec_is_not_trivial(spec):
 
 
 @pytest.mark.parametrize("seen_signed", [False, True])
-def test_xsnap_pairs_match_spec(spark, sides, spec, seen_signed):
+def test_xsnap_pairs_match_spec(spark, sides, spec, seen_signed, new_mat):
     left, right = sides
     seen = signature_stage(right, CFG) if seen_signed else right
-    out = cross_snapshot_neardup_pairs(left, seen, CFG, seen_signed=seen_signed)
+    out = cross_snapshot_neardup_pairs(left, seen, CFG, seen_signed=seen_signed,
+                                       mat=new_mat())
     assert out.columns == ["url_new", "url_seen", "jaccard_est"]
     got = {(r[0], r[1]): r[2] for r in out.collect()}
     assert got == spec[0]
 
 
-def test_contamination_pairs_match_spec(spark, sides, spec):
+def test_contamination_pairs_match_spec(spark, sides, spec, new_mat):
     left, right = sides
     out = fuzzy_contamination_pairs(
-        left, right.withColumnRenamed("url", "eval_id"), CFG, id_col="url")
+        left, right.withColumnRenamed("url", "eval_id"), CFG, id_col="url",
+        mat=new_mat())
     assert out.columns == ["url", "eval_id", "jaccard_est"]
     got = {(r[0], r[1]): r[2] for r in out.collect()}
     assert got == spec[0]
@@ -100,12 +102,13 @@ def hints_only(spark):
     spark.conf.set(key, prior)
 
 
-def test_join_direction(spark, sides, hints_only):
+def test_join_direction(spark, sides, hints_only, new_mat):
     """Contamination broadcasts the eval side; xsnap broadcasts nothing
     (the seen side is the accumulated corpus)."""
     left, right = sides
     contam = fuzzy_contamination_pairs(
-        left, right.withColumnRenamed("url", "eval_id"), CFG, id_col="url")
-    xsnap = cross_snapshot_neardup_pairs(left, right, CFG)
+        left, right.withColumnRenamed("url", "eval_id"), CFG, id_col="url",
+        mat=new_mat())
+    xsnap = cross_snapshot_neardup_pairs(left, right, CFG, mat=new_mat())
     assert "BroadcastHashJoin" in physical_plan(contam)
     assert "BroadcastHashJoin" not in physical_plan(xsnap)

@@ -481,6 +481,7 @@ def test_kitchen_sink_full_funnel(spark, tmp_path):
     spark.createDataFrame([(eval_text,)], "text string") \
         .write.parquet(str(tmp_path / "eval"))
 
+    spark.catalog.clearCache()
     rep = _main([
         "--warc-input", str(root),
         "--output", str(tmp_path / "out_ks"),
@@ -495,6 +496,9 @@ def test_kitchen_sink_full_funnel(spark, tmp_path):
         "--token-budget", "2000",
         "--shards", "2",
     ])
+    # each stage's materializer is freed once its stage is written and
+    # re-read, so no cache outlives the run
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     stages = {s["stage"]: s["rows"] for s in rep["stages"]}
     # every configured stage ran, in order
     want_order = ["s01_filtered", "s01b_block_reasons", "s01c_blocklisted",

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from doppel_spark.operators.graph import RANK_SCALE, host_rank
+from doppel_spark.operators.stage import StageMaterializer
 
 
 def ref_rank(edge_list, iterations, d_num=85, d_den=100, scale=RANK_SCALE):
@@ -30,9 +31,19 @@ def ref_rank(edge_list, iterations, d_num=85, d_den=100, scale=RANK_SCALE):
     return score
 
 
+def _ranks(df, **kw):
+    """``host_rank(df, **kw)`` rows, cut through a materializer freed
+    afterwards."""
+    mat = StageMaterializer.for_input(df, prefix="rank")
+    try:
+        return host_rank(df, mat=mat, **kw).collect()
+    finally:
+        mat.cleanup()
+
+
 def _run(spark, edge_list, **kw):
     df = spark.createDataFrame(edge_list, "src long, dst long")
-    return {r.host: r.rank_micros for r in host_rank(df, **kw).collect()}
+    return {r.host: r.rank_micros for r in _ranks(df, **kw)}
 
 
 def test_matches_reference_simulator_small_graph(spark):
@@ -80,15 +91,15 @@ def test_hub_ranks_highest(spark):
 def test_deterministic_across_partitionings(spark):
     edges = [(i % 7, (i * 3 + 1) % 7) for i in range(60)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    a = sorted(host_rank(df, iterations=4).collect())
-    b = sorted(host_rank(df.repartition(13), iterations=4).collect())
+    a = sorted(_ranks(df, iterations=4))
+    b = sorted(_ranks(df.repartition(13), iterations=4))
     assert a == b
 
 
 def test_rejects_zero_iterations(spark):
     df = spark.createDataFrame([(0, 1)], "src long, dst long")
     with pytest.raises(ValueError):
-        host_rank(df, iterations=0)
+        _ranks(df, iterations=0)
 
 
 def test_weight_column_path(spark):
@@ -97,5 +108,5 @@ def test_weight_column_path(spark):
     multi = [(1, 0)] * 3 + [(0, 1), (1, 2), (2, 0)]
     df = spark.createDataFrame(weighted, "src long, dst long, w long")
     got = {r.host: r.rank_micros
-           for r in host_rank(df, weight="w", iterations=3).collect()}
+           for r in _ranks(df, weight="w", iterations=3)}
     assert got == ref_rank(multi, 3)

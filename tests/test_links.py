@@ -43,10 +43,10 @@ def test_host_edges_canonicalize_weight_and_drop(spark):
     }
 
 
-def test_host_rank_from_pages_composes(spark):
+def test_host_rank_from_pages_composes(spark, new_mat):
     ranks = {r.host: r.rank_micros
              for r in host_rank(host_edges(_pages(spark)), weight="w",
-                                iterations=3).collect()}
+                                iterations=3, mat=new_mat()).collect()}
     # nodes = all edge endpoints; b.com is the only multiply-linked sink
     assert set(ranks) == {"a.com", "b.com", "c.com"}
     assert max(ranks, key=ranks.get) == "b.com"

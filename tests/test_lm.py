@@ -83,19 +83,6 @@ def test_tercile_thresholds_with_ties(spark):
     assert (th["t1"], th["t2"]) == (5, 7)
 
 
-def test_materialized_path_identical(spark):
-    from doppel_spark.operators.stage import StageMaterializer
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
-    plain = sorted(tuple(r) for r in ccnet_buckets(docs).collect())
-    mat = StageMaterializer(spark, mode="table", prefix="lm_test")
-    try:
-        cut = sorted(tuple(r) for r in ccnet_buckets(docs, mat=mat).collect())
-    finally:
-        mat.cleanup()
-    assert plain == cut
-
-
 def test_ccnet_buckets_composition(spark):
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")

@@ -77,33 +77,35 @@ def test_signature_agreement_column(spark):
     assert got == pytest.approx(0.75)
 
 
-def test_pairs_from_buckets_all_pairs_and_star(spark):
+def test_pairs_from_buckets_all_pairs_and_star(spark, new_mat):
     rows = [(1, "u1"), (1, "u2"), (1, "u3"), (2, "u4")]
     df = spark.createDataFrame(rows, "k int, url string")
     pairs = {(r["url_a"], r["url_b"])
-             for r in pairs_from_buckets(df, ["k"], bucket_cap=10).collect()}
+             for r in pairs_from_buckets(df, ["k"], bucket_cap=10,
+                                          mat=new_mat()).collect()}
     assert pairs == {("u1", "u2"), ("u1", "u3"), ("u2", "u3")}
     star = {(r["url_a"], r["url_b"])
-            for r in pairs_from_buckets(df, ["k"], bucket_cap=2).collect()}
+            for r in pairs_from_buckets(df, ["k"], bucket_cap=2,
+                                          mat=new_mat()).collect()}
     assert star == {("u1", "u2"), ("u1", "u3")}  # star around min id
 
 
-def test_connected_components_chain_and_determinism(spark):
+def test_connected_components_chain_and_determinism(spark, new_mat):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], "url_a string, url_b string")
-    cc = connected_components(edges).collect()
+    cc = connected_components(edges, mat=new_mat()).collect()
     by_node = {r["url"]: r["cluster_rep"] for r in cc}
     assert by_node == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
     ids = {r["url"]: r["cluster_id"] for r in cc}
     assert ids["a"] == ids["b"] == ids["c"] != ids["x"]
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, new_mat):
     # diameter > 1 iteration: 8-node path
     nodes = [f"n{i}" for i in range(9)]
     edges = spark.createDataFrame(
         list(zip(nodes, nodes[1:])), "url_a string, url_b string")
-    cc = connected_components(edges)
+    cc = connected_components(edges, mat=new_mat())
     assert cc.select("cluster_rep").distinct().count() == 1
     assert cc.count() == 9
 
@@ -219,7 +221,7 @@ def test_minhash_num_perm_not_chunk_multiple(spark):
     assert all(len(r["band_hashes"]) == 16 for r in rows)
 
 
-def test_components_nonconvergence_raises(spark):
+def test_components_nonconvergence_raises(spark, new_mat):
     from doppel_spark.operators.components import (
         ComponentsNotConverged,
         connected_components as cc,
@@ -228,7 +230,7 @@ def test_components_nonconvergence_raises(spark):
     chain = [(f"n{i:03d}", f"n{i+1:03d}") for i in range(12)]
     edges = spark.createDataFrame(chain, "url_a string, url_b string")
     with pytest.raises(ComponentsNotConverged):
-        cc(edges, max_iter=1).collect()
+        cc(edges, max_iter=1, mat=new_mat()).collect()
     with pytest.warns(RuntimeWarning):
-        got = cc(edges, max_iter=1, strict=False)
+        got = cc(edges, max_iter=1, strict=False, mat=new_mat())
         got.collect()

@@ -196,7 +196,7 @@ def test_word_ngrams_letbound_values_match_python(spark, n):
 # connected components: explode-based symmetrization + lazy cut policy
 
 
-def test_cc_orientation_and_duplicate_invariance(spark):
+def test_cc_orientation_and_duplicate_invariance(spark, new_mat):
     """The r6 symmetrization builds (u,v)+(v,u) from ONE scan of the
     edge list via explode; components must be invariant to edge
     orientation and to duplicated edges (distinct() semantics)."""
@@ -208,7 +208,7 @@ def test_cc_orientation_and_duplicate_invariance(spark):
     outs = []
     for rows in (fwd, rev, dup):
         df = spark.createDataFrame(rows, "url_a string, url_b string")
-        cc = connected_components(df)
+        cc = connected_components(df, mat=new_mat())
         outs.append(sorted((r["url"], r["cluster_rep"], r["cluster_id"])
                            for r in cc.collect()))
     assert outs[0] == outs[1] == outs[2]

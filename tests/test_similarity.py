@@ -61,7 +61,7 @@ def test_lsh_ann_recall_reasonable(spark):
     assert len(a) > 0
 
 
-def test_embedding_neardup_planted(spark):
+def test_embedding_neardup_planted(spark, new_mat):
     rng = np.random.RandomState(0)
     base = rng.standard_normal((20, 16))
     rows = [(i, base[i].tolist()) for i in range(20)]
@@ -69,11 +69,12 @@ def test_embedding_neardup_planted(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     bf = embedding_neardup_pairs(emb, threshold=0.95, brute_force=True).collect()
     assert {(r["id_a"], r["id_b"]) for r in bf} == {(3, 100)}
-    lsh = embedding_neardup_pairs(emb, threshold=0.95, dim=16).collect()
+    lsh = embedding_neardup_pairs(emb, threshold=0.95, dim=16,
+                                  mat=new_mat()).collect()
     assert {(r["id_a"], r["id_b"]) for r in lsh} == {(3, 100)}
 
 
-def test_embedding_neardup_banded_recall_and_plan(spark):
+def test_embedding_neardup_banded_recall_and_plan(spark, new_mat):
     # 60 planted near-dup pairs; banded sign-LSH must recover >= 0.95 of
     # what brute force finds, with NO cartesian/nested-loop join in plan
     from doppel_spark.plans.inspect import physical_plan
@@ -87,7 +88,7 @@ def test_embedding_neardup_banded_recall_and_plan(spark):
     bf = {(r["id_a"], r["id_b"])
           for r in embedding_neardup_pairs(emb, 0.95, brute_force=True).collect()}
     lsh_df = embedding_neardup_pairs(emb, 0.95, bands=24, rows_per_band=16,
-                                     dim=32)
+                                     dim=32, mat=new_mat())
     lsh = {(r["id_a"], r["id_b"]) for r in lsh_df.collect()}
     assert len(bf) >= 50
     assert len(lsh & bf) / len(bf) >= 0.95
@@ -141,6 +142,13 @@ def test_similarity_entry_points_require_dim(spark):
         embedding_neardup_pairs(emb, threshold=0.95)
 
 
+def test_embedding_neardup_lsh_requires_mat(spark):
+    # the caller owns the materializer: the LSH path never builds one
+    emb = spark.read.parquet(EMB)
+    with pytest.raises(ValueError, match="requires mat"):
+        embedding_neardup_pairs(emb, threshold=0.95, dim=64)
+
+
 def _onehot_emb(spark, groups=8, members=3, dim=16):
     base = spark.range(groups * members).select(
         (F.col("id") / members).cast("long").alias("g"),
@@ -154,27 +162,28 @@ def _onehot_emb(spark, groups=8, members=3, dim=16):
         ).alias("embedding"))
 
 
-def test_semantic_dedup_pinned_clusters(spark):
+def test_semantic_dedup_pinned_clusters(spark, new_mat):
     from doppel_spark.operators.similarity import semantic_dedup
 
     got = {(r.vec_id, r.cluster_rep, r.keep)
            for r in semantic_dedup(_onehot_emb(spark), threshold=0.95,
-                                   dim=16).collect()}
+                                   dim=16, mat=new_mat()).collect()}
     want = {(g * 100 + m, g * 100, m == 0)
             for g in range(8) for m in range(3)}
     assert got == want
 
 
-def test_semantic_dedup_brute_matches_lsh_and_singletons(spark):
+def test_semantic_dedup_brute_matches_lsh_and_singletons(spark, new_mat):
     from doppel_spark.operators.similarity import semantic_dedup
 
     # drop two groups to one member each — they must come back as
     # singleton keepers on both paths, and the paths must agree
     emb = _onehot_emb(spark).filter(
         ~((F.col("vec_id") >= 600) & (F.col("vec_id") % 100 > 0)))
-    lsh = {tuple(r) for r in semantic_dedup(emb, threshold=0.95,
-                                            dim=16).collect()}
+    lsh = {tuple(r) for r in semantic_dedup(emb, threshold=0.95, dim=16,
+                                            mat=new_mat()).collect()}
     brute = {tuple(r) for r in semantic_dedup(emb, threshold=0.95,
-                                              brute_force=True).collect()}
+                                              brute_force=True,
+                                              mat=new_mat()).collect()}
     assert lsh == brute
     assert (600, 600, True) in lsh and (700, 700, True) in lsh

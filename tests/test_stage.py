@@ -158,8 +158,8 @@ def test_cut_force_false_lazy_persist(spark):
 
 
 def test_cleanup_tolerates_stopped_context(spark, monkeypatch):
-    # atexit-registered ad-hoc materializers can fire after spark.stop();
-    # unpersist then raises from the JVM (block manager endpoint gone).
+    # a result's cleanup() can run after spark.stop(); unpersist then
+    # raises from the JVM (block manager endpoint gone).
     # cleanup must swallow it and still clear its own state.
     mat = StageMaterializer(spark, mode="persist", prefix="t")
     out = mat.cut(spark.range(100).toDF("id"), "stage1")

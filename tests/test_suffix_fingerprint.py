@@ -51,12 +51,12 @@ def test_kgram_and_winnow_shared_substring():
     assert fa & fb
 
 
-def test_substring_dup_pairs_on_corpus(spark):
+def test_substring_dup_pairs_on_corpus(spark, new_mat):
     n = 300
     pages = synth_pages(spark, n).filter("url like '%/lcs/%'").cache()
     n_lcs = pages.count()
     assert n_lcs >= 2
-    got = substring_dup_pairs(pages, min_len=256).collect()
+    got = substring_dup_pairs(pages, min_len=256, mat=new_mat()).collect()
     pairs = {(r["url_a"], r["url_b"]) for r in got}
     # every planted lcs pair (members /0 and /1 of the same pair id) found
     import re
@@ -75,9 +75,10 @@ def test_substring_dup_pairs_on_corpus(spark):
     pages.unpersist()
 
 
-def test_substring_pairs_absent_for_unrelated(spark):
+def test_substring_pairs_absent_for_unrelated(spark, new_mat):
     docs = spark.createDataFrame(
         [("a", "completely different text " * 30),
          ("b", "another unrelated document body " * 30)],
         "url string, text string")
-    assert substring_dup_pairs(docs, min_len=128).count() == 0
+    assert substring_dup_pairs(docs, min_len=128,
+                               mat=new_mat()).count() == 0

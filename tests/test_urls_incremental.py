@@ -161,18 +161,18 @@ def _xsnap_fixtures(spark):
     return incoming, seen
 
 
-def test_cross_snapshot_neardup_pairs_planted(spark):
+def test_cross_snapshot_neardup_pairs_planted(spark, new_mat):
     from doppel_spark.operators.dedup import cross_snapshot_neardup_pairs
 
     incoming, seen = _xsnap_fixtures(spark)
     got = sorted(
         (r["doc_id_new"], r["doc_id_seen"], r["jaccard_est"])
         for r in cross_snapshot_neardup_pairs(
-            incoming, seen, id_col="doc_id").collect())
+            incoming, seen, id_col="doc_id", mat=new_mat()).collect())
     assert got == [("n0", "s0", 1.0), ("n1", "s1", 1.0), ("n2", "s2", 1.0)]
 
 
-def test_cross_snapshot_neardup_seen_signed(spark):
+def test_cross_snapshot_neardup_seen_signed(spark, new_mat):
     """Production path: the seen side arrives as a maintained signature
     table — results identical to signing it in-line."""
     from doppel_spark.config import NearDupConfig
@@ -184,17 +184,18 @@ def test_cross_snapshot_neardup_seen_signed(spark):
     got = sorted(
         (r["doc_id_new"], r["doc_id_seen"], r["jaccard_est"])
         for r in cross_snapshot_neardup_pairs(
-            incoming, seen_sig, id_col="doc_id", seen_signed=True).collect())
+            incoming, seen_sig, id_col="doc_id", seen_signed=True,
+            mat=new_mat()).collect())
     assert got == [("n0", "s0", 1.0), ("n1", "s1", 1.0), ("n2", "s2", 1.0)]
 
 
-def test_cross_snapshot_neardup_empty_seen(spark):
+def test_cross_snapshot_neardup_empty_seen(spark, new_mat):
     from doppel_spark.operators.dedup import cross_snapshot_neardup_pairs
 
     incoming, _ = _xsnap_fixtures(spark)
     empty = spark.createDataFrame([], "doc_id string, text string")
     assert cross_snapshot_neardup_pairs(
-        incoming, empty, id_col="doc_id").count() == 0
+        incoming, empty, id_col="doc_id", mat=new_mat()).count() == 0
 
 
 def test_url_signals_shapes(spark):

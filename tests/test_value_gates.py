@@ -1,10 +1,11 @@
-"""Value gates for three rows-only contract queries.
+"""Value gates for five rows-only contract queries.
 
-``minhash_lsh_clusters``, ``simhash_fingerprints`` and
-``simhash_near_pairs`` have no DuckDB oracle (their values are defined
-by engine hash functions), so the contract sweep only checks that they
-run. These tests recompute them at sf0.01 from the per-document Python
-specs — no Spark, no batch kernel — and compare every row (and, for the
+``minhash_lsh_clusters``, ``simhash_fingerprints``,
+``simhash_near_pairs``, ``emb_neardup_lsh`` and ``substring_pairs``
+have no DuckDB oracle (their values are defined by engine hash
+functions), so the contract sweep only checks that they run. These
+tests recompute them at sf0.01 from per-document Python/numpy specs —
+no Spark, no batch kernel — and compare every row (and, for the
 clusters, every stage's values).
 """
 
@@ -32,6 +33,8 @@ from doppel_spark.functions.minhash import (  # noqa: E402
     perm_constants,
 )
 from doppel_spark.operators.neardup import near_dup_pipeline  # noqa: E402
+from doppel_spark.operators.stage import StageMaterializer  # noqa: E402
+from doppel_spark.operators.suffix import fingerprint_candidates  # noqa: E402
 from minhash_spec import shingle_hashes  # noqa: E402
 from test_entry_contract import SF_DIR  # noqa: E402  (the contract's corpus)
 
@@ -193,3 +196,138 @@ def test_simhash_near_pairs_matches_python_spec(spark):
     assert any(b == str(int(a) + 3_000_000) for a, b, _ in want)
     assert any(d > 0 for *_, d in want)
     assert got == want
+
+
+def _star_capped_pairs(buckets, cap: int) -> set:
+    """Candidate pairs of ``bucket → member ids``: every pair of a bucket
+    of at most ``cap`` members, star pairs around the minimum member of
+    a larger one (``lsh.pairs_from_membership``)."""
+    out = set()
+    for members in buckets.values():
+        members = sorted(set(members))
+        if len(members) <= cap:
+            out.update(combinations(members, 2))
+        else:
+            out.update((members[0], m) for m in members[1:])
+    return out
+
+
+def test_emb_neardup_lsh_matches_numpy_spec(spark):
+    """The 500 sf0.01 vectors plus the query's 50 planted copies
+    (``x + 0.03·reverse(x)`` in double, stored as float), 16 bands × 16
+    random-hyperplane sign bits, splitmix64 band keys, star-capped
+    buckets, then cosine ≥ 0.95 — in numpy."""
+    bands, rows, cap, thr = 16, 16, 256, 0.95
+    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet",
+                        columns=["vec_id", "embedding"]).to_pandas()
+    ids = emb["vec_id"].to_numpy()
+    x = np.stack(emb["embedding"].to_numpy()).astype(np.float32)
+    first = x[ids < 50]
+    copies = (first.astype(np.float64)
+              + 0.03 * first[:, ::-1].astype(np.float64)).astype(np.float32)
+    ids = np.concatenate([ids, ids[ids < 50] + 5_000_000])
+    vecs = np.concatenate([x, copies]).astype(np.float64)
+
+    planes = np.random.RandomState(42).standard_normal(
+        (bands * rows, entrymod.EMB_DIM))
+    proj = vecs @ planes.T
+    # no projection near 0, so summation order cannot flip a sign bit
+    assert np.abs(proj).min() > 1e-12
+    mask = (1 << 64) - 1
+
+    def splitmix64(z: int) -> int:
+        z = (z + 0x9E3779B97F4A7C15) & mask
+        z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & mask
+        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & mask
+        return z ^ (z >> 31)
+
+    buckets = defaultdict(list)
+    for i, bits in enumerate(proj >= 0):
+        for band in range(bands):
+            packed = sum(1 << j for j in range(rows)
+                         if bits[band * rows + j])
+            key = splitmix64((packed + splitmix64(band)) & mask) >> 1
+            buckets[key].append(int(ids[i]))
+    row = {int(v): i for i, v in enumerate(ids)}
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    want = set()
+    for a, b in _star_capped_pairs(buckets, cap):
+        cos = float(unit[row[a]] @ unit[row[b]])
+        # no cosine near the threshold, so rounding cannot flip a pair
+        assert abs(cos - thr) > 1e-9
+        if cos >= thr:
+            want.add((a, b))
+    got = {tuple(r) for r in entrymod.queries()["emb_neardup_lsh"](
+        spark, SF_DIR).collect()}
+    assert len(want) > 0  # non-vacuous: the planted copies are found
+    assert got == want
+
+
+def _spec_kgram_hashes(data: np.ndarray, k: int) -> np.ndarray:
+    """Σ_{m<k} d[i+m]·B^(k−1−m) mod 2⁶⁴ for every k-gram, as the direct
+    windowed sum."""
+    base = 1099511628211
+    powers = np.array([pow(base, k - 1 - m, 1 << 64) for m in range(k)],
+                      dtype=np.uint64)
+    windows = np.lib.stride_tricks.sliding_window_view(
+        data.astype(np.uint64), k)
+    with np.errstate(over="ignore"):
+        return (windows * powers).sum(axis=1, dtype=np.uint64)
+
+
+def _spec_lcs_len(a: str, b: str) -> int:
+    """Longest common substring length by dynamic programming."""
+    xb = np.array([ord(c) for c in b])
+    prev = np.zeros(len(b) + 1, dtype=np.int64)
+    best = 0
+    for c in a:
+        cur = np.zeros_like(prev)
+        cur[1:] = np.where(xb == ord(c), prev[:-1] + 1, 0)
+        best = max(best, int(cur.max()))
+        prev = cur
+    return best
+
+
+def test_substring_pairs_matches_python_spec(spark):
+    """Winnowed 64-gram fingerprints of the UTF-8 bytes (window 64; a
+    text shorter than 64 bytes is zero-padded to one k-gram),
+    fingerprint buckets, then the longest common substring ≥ 200 of
+    every candidate pair — recomputed per document."""
+    k = window = 64
+    cap, min_len = 256, 200
+    docs = _documents()
+    urls = docs["doc_id"].astype(str).tolist()
+    texts = dict(zip(urls, docs["text"]))
+    buckets = defaultdict(list)
+    for u in urls:
+        data = np.frombuffer((texts[u] or "").encode("utf-8"), dtype=np.uint8)
+        if len(data) < k:
+            data = np.pad(data, (0, k - len(data)))
+        h = _spec_kgram_hashes(data, k)
+        mins = (np.lib.stride_tricks.sliding_window_view(h, window).min(axis=1)
+                if len(h) > window else h.min(keepdims=True))
+        for fp in set((mins >> np.uint64(1)).tolist()):
+            buckets[fp].append(u)
+    # no bucket is over the cap, so every candidate pair is a full pair
+    assert max(len(b) for b in buckets.values()) <= cap
+    cand = _star_capped_pairs(buckets, cap)
+    want = set()
+    for a, b in cand:
+        n = _spec_lcs_len(texts[a] or "", texts[b] or "")
+        if n >= min_len:
+            want.add((a, b, n))
+    got = {tuple(r) for r in entrymod.queries()["substring_pairs"](
+        spark, SF_DIR).collect()}
+    # non-vacuous: some candidates share a long substring, some do not
+    assert len(want) > 0 and len(cand) > len(want)
+    assert got == want
+    # the verified pairs survive many fingerprint faults (a long shared
+    # substring still shares some fingerprint), so the candidates are
+    # gated too
+    frame = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
+             .withColumn("url", F.col("doc_id").cast("string")))
+    mat = StageMaterializer.for_input(frame, prefix="suffix")
+    got_cand = {tuple(r) for r in fingerprint_candidates(
+        frame, bucket_cap=cap, mat=mat).collect()}
+    mat.cleanup()
+    assert got_cand == cand
